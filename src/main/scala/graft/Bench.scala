@@ -90,7 +90,7 @@ import graft.kg._
   *     feeds part 2 through the whole-run budget).
   * 10. Final line: per-round arrays carry eff only (tuples live in the
   *     scaling_round lines + mirror); targets < 1.5 KB durably.
-  * 11. `parsed:null` FIX, measured with graft.tools.RawProbe: the run
+  * 11. `parsed:null` FIX, measured with a one-off stdout probe: the run
   *     is forked, and sbt's default LoggedOutput pumped every child
   *     line — even raw FileDescriptor.out writes — through its log
   *     appender as "[info] <line>", then appended a "[success]"

@@ -34,7 +34,7 @@ object Main {
     import spark.implicits._
 
     val corpus = opts.get("--corpus") match {
-      case Some(dir) => new LocalParquetIO(dir, s"$out/triples").readCorpus(spark).toDF()
+      case Some(dir) => spark.read.schema(TableIO.corpusSchema).parquet(dir)
       case None =>
         val n = opts.getOrElse("--nfiles", "60").toInt
         // distributed deterministic generation: file i is a pure function of i

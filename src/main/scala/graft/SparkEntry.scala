@@ -16,13 +16,11 @@ object SparkEntry {
     import spark.implicits._
     val corpus = fixtures.CorpusGen.corpus(fixtures.CorpusGen.TinyFiles).toDF()
     val dict = kg.KgPipeline.dictDataset(spark)
-    val hashed = corpus
-      .withColumn("file_sha", org.apache.spark.sql.functions.sha2(
-        org.apache.spark.sql.functions.col("content"), 256))
+    val hashed = kg.TableIO.withInvariants(corpus, 1)
+      .select("repo", "path", "commit", "lang", "content", "file_sha")
       .as[kg.HashedFile]
-    val rels = kg.Extract.scoredRelations(hashed,
-      kg.Extract.broadcastFnAliases(spark, dict))
-    kg.Canonicalize.toTriples(rels, kg.Canonicalize.linkMap(dict)).toDF()
+    kg.Extract.canonicalTriples(hashed, kg.Extract.broadcastFnAliases(spark, dict),
+      kg.Canonicalize.broadcastLinkMap(spark, dict)).toDF()
   }
 
   private val all: Map[String, Q] =

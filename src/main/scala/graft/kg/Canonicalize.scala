@@ -99,11 +99,11 @@ object Canonicalize {
     //    over round. Cross-group duplicates (two sources electing the
     //    same (v,m)) survive a round but are deduped by the next star's
     //    lag test; one final distinct before the node join restores set
-    //    semantics for the result. The sig fixpoint test now compares
-    //    MULTISETS: one round after the set fixpoint the round map
-    //    reproduces its input multiset exactly (output = F(set) and the
-    //    set is stable), so detection fires at most one round later
-    //    than the old set-based test.
+    //    semantics for the result. The `sig` fixpoint test therefore
+    //    compares MULTISETS (hence its sum term): one round after the
+    //    set fixpoint the round map reproduces its input multiset
+    //    exactly (output = F(set) and the set is stable), so detection
+    //    fires at most one round later than the old set-based test.
     // Per round: sym exchange + oriented exchange = 2 exchanges;
     // CcProbe measured the old join form at ~6 AQE stage-jobs per round
     // on sf0.1 (66 jobs / 211 stages for 11 rounds).
@@ -156,12 +156,6 @@ object Canonicalize {
         .where($"src" =!= $"dst")
     }
 
-    // canonical-pair content digest + count: cheap fixpoint detection
-    def sig(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-        expr("bit_xor(xxhash64(least(src, dst), greatest(src, dst)))")).first()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
     // LAZY localCheckpoint: the sig() aggregation is the action that
     // materializes each checkpoint, so a convergence round costs ONE
     // Spark job, not two (eager checkpoint + agg). One large/small
@@ -197,6 +191,20 @@ object Canonicalize {
     nodes.join(cur.select($"src".as("node"), $"dst".as("comp")).distinct(),
         Seq("node"), "left")
       .select($"node", coalesce($"comp", $"node").as("comp"))
+  }
+
+  /** Multiset signature of an undirected edge frame, the CC fixpoint
+    * test: count, xor and wrapping sum of each canonical pair's
+    * xxhash64. Xor alone cancels pairs of equal rows, so
+    * {(a,c)×1, (b,c)×2} and {(a,c)×3} would collide; the sum sees
+    * multiplicity. The sum runs in decimal (no ANSI overflow) and is
+    * wrapped to 64 bits on the driver.
+    */
+  def sig(edges: DataFrame): (Long, Long, Long) = {
+    val h = expr("xxhash64(least(src, dst), greatest(src, dst))")
+    val r = edges.agg(count(lit(1)), bit_xor(h), sum(h.cast("decimal(20,0)"))).first()
+    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1),
+      if (r.isNullAt(2)) 0L else r.getDecimal(2).toBigInteger.longValue)
   }
 
   /** Min-label propagation CC (O(diameter) rounds) — kept as the simple
@@ -270,10 +278,15 @@ object Canonicalize {
   def linkMap(dict: Dataset[DictEntry]): Dataset[CanonicalLink] = {
     val spark = dict.sparkSession
     import spark.implicits._
+    // one materialization shared by the count and the component pass;
+    // both paths have read it by the time they return (localComponents
+    // collects, connectedComponents checkpoints), so release it here
     val edges = aliasEdges(dict).cache()
     val edgeComps =
-      if (edges.count() <= SmallGraphEdges) localComponents(edges)
-      else connectedComponents(edges)
+      try {
+        if (edges.count() <= SmallGraphEdges) localComponents(edges)
+        else connectedComponents(edges)
+      } finally edges.unpersist()
     // Seed the component set with EVERY dict norm: a single-alias entity
     // produces no edges (sameEntityEdges needs >=2 norms, lshEdges needs a
     // lev<=1 partner), yet SPEC.md §4 / Oracle.canonicalMap still map it to
@@ -297,30 +310,4 @@ object Canonicalize {
                        dict: Dataset[DictEntry]): org.apache.spark.broadcast.Broadcast[Map[String, String]] =
     spark.sparkContext.broadcast(
       linkMap(dict).collect().map(l => l.norm -> l.canonical).toMap)
-
-  /** Canonicalize scored relations into final triples via two broadcast
-    * joins (SURVEY J1): subj and obj norms → cluster canonical; symbols
-    * outside the dictionary pass through unchanged.
-    */
-  def toTriples(rels: Dataset[ScoredRelation], links: Dataset[CanonicalLink]): Dataset[Triple] = {
-    val spark = rels.sparkSession
-    import spark.implicits._
-    val l = links.toDF()
-    rels.toDF()
-      .join(broadcast(l.select($"norm".as("subjNorm"), $"canonical".as("subjCanon"))),
-        Seq("subjNorm"), "left")
-      .join(broadcast(l.select($"norm".as("objNorm"), $"canonical".as("objCanon"))),
-        Seq("objNorm"), "left")
-      .select(
-        coalesce($"subjCanon", $"subjNorm").as("subj"),
-        $"pred",
-        coalesce($"objCanon", $"objNorm").as("obj"),
-        $"repo", $"path", $"commit",
-        $"fileSha", $"score")
-      // max, not dropDuplicates: duplicate triples may carry different
-      // scores (same call at different distances) — keep it deterministic
-      .groupBy("subj", "pred", "obj", "repo", "path", "commit", "fileSha")
-      .agg(max($"score").as("score"))
-      .as[Triple]
-  }
 }

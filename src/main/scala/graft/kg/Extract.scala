@@ -158,8 +158,9 @@ object Extract {
     * The norm→canonical link map is broadcast alongside the function
     * dictionary (BASELINE.json:6 "mapPartitions-backed broadcast
     * dictionaries"), so canonicalization costs zero extra stages — the
-    * only shuffle left downstream is the global triple dedup. Semantics
-    * identical to Canonicalize.toTriples ∘ scoredRelations (e2e-gated).
+    * only shuffle left downstream is the global triple dedup. This is
+    * the one canonicalization path: KgPipeline, SparkEntry.entry and the
+    * oracled `kg_triples_counts` key all run it.
     */
   def canonicalTriples(ds: Dataset[HashedFile],
                        fnAliases: Broadcast[Set[String]],

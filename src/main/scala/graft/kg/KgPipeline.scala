@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   *
   *   corpus → sha256 invariant → [resume anti-join vs manifest]
   *     → fused mention-scan + pair-gen + classify (narrow, broadcast dict)
-  *     → canonicalize (LSH + connected components + broadcast link joins)
+  *     → canonicalize (LSH + connected components → broadcast link map,
+  *       applied inside the same flatMap)
   *     → distinct triples → salted repartition → partitioned write
   *     → per-bucket lineage manifest
   *
@@ -41,10 +42,6 @@ object KgPipeline {
           cfg: KgConfig, onlyBuckets: Option[Set[Int]] = None): KgResult = {
     import spark.implicits._
     val t0 = System.currentTimeMillis()
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
 
     val hashed = TableIO.withInvariants(corpus, cfg.nBuckets)
 
@@ -75,8 +72,7 @@ object KgPipeline {
     val out = triples.repartition(
       col("bucket"), col("pred"),
       pmod(xxhash64(col("fileSha")), lit(cfg.writeSalt)))
-    out.write.mode("overwrite").partitionBy("bucket", "pred")
-      .parquet(cfg.triplesDir)
+    TableIO.writeTriples(out, cfg.triplesDir)
 
     // lineage from what actually landed on disk (SURVEY A7/S5)
     val written = spark.read.parquet(cfg.triplesDir)

@@ -1,22 +1,17 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Storage seam (SURVEY §7.3). Production contract is Iceberg
-  * (`kg.corpus`, `kg.triples` partitioned by pred — BASELINE.json:6);
-  * no Iceberg runtime jar exists in this sandbox (SURVEY §0.2), so the
-  * local binding is partitioned parquet honoring the exact same schemas.
-  * Swapping `LocalParquetIO` for an Iceberg-backed implementation is the
-  * only change needed for `spark-submit` clusters.
+/** Table contract (SURVEY §7.3): the corpus schema, the per-row input
+  * invariant, and the triple table's one layout decision. Production
+  * targets Iceberg (`kg.corpus`, `kg.triples` partitioned by pred —
+  * BASELINE.json:6); the build has no Iceberg runtime jar (SURVEY
+  * §0.2), so the triple table is partitioned parquet with the same
+  * schema and partition spec. Moving it to Iceberg is a change to
+  * `writeTriples` alone (docs/SCALE.md §2).
   */
-trait TableIO {
-  def readCorpus(spark: SparkSession): Dataset[CodeFile]
-  def writeTriples(triples: DataFrame, mode: SaveMode): Unit
-  def readTriples(spark: SparkSession): DataFrame
-}
-
 object TableIO {
   val corpusSchema: StructType = StructType(Seq(
     StructField("repo", StringType, nullable = false),
@@ -41,51 +36,16 @@ object TableIO {
         length(col("content")) <= MaxContentChars)
       .withColumn("file_sha", sha2(col("content"), 256))
       .withColumn("bucket", pmod(xxhash64(col("file_sha")), lit(nBuckets)).cast("int"))
-}
 
-/** Iceberg binding for `spark-submit` clusters (BASELINE.json:6
-  * "partitioned Iceberg graph tables"). INTERFACE-ONLY in this sandbox:
-  * no `iceberg-spark-runtime` jar exists here (SURVEY §0.2), so the
-  * implementation is the exact call sequence a cluster deployment uses,
-  * guarded by a runtime check for the catalog plugin. The schemas and
-  * partition spec are identical to LocalParquetIO's — swapping bindings
-  * changes no pipeline code.
-  */
-final class IcebergTableIO(catalog: String, corpusTable: String,
-                           triplesTable: String) extends TableIO {
-  private def requireIceberg(spark: SparkSession): Unit =
-    require(spark.conf.getOption(s"spark.sql.catalog.$catalog").isDefined,
-      s"Iceberg catalog '$catalog' is not configured; this sandbox has no " +
-        "iceberg-spark-runtime jar — use LocalParquetIO (same schemas).")
-  override def readCorpus(spark: SparkSession): Dataset[CodeFile] = {
-    requireIceberg(spark)
-    import spark.implicits._
-    spark.read.table(s"$catalog.$corpusTable")
-      .select("repo", "path", "commit", "lang", "content").as[CodeFile]
-  }
-  override def writeTriples(triples: DataFrame, mode: SaveMode): Unit = {
-    requireIceberg(triples.sparkSession)
-    // Iceberg v2: dynamic overwrite of (bucket, pred) partitions
-    val w = triples.writeTo(s"$catalog.$triplesTable")
-    if (mode == SaveMode.Overwrite) w.overwritePartitions() else w.append()
-  }
-  override def readTriples(spark: SparkSession): DataFrame = {
-    requireIceberg(spark)
-    spark.read.table(s"$catalog.$triplesTable")
-  }
-}
-
-final class LocalParquetIO(corpusDir: String, triplesDir: String) extends TableIO {
-  override def readCorpus(spark: SparkSession): Dataset[CodeFile] = {
-    import spark.implicits._
-    spark.read.schema(TableIO.corpusSchema).parquet(corpusDir).as[CodeFile]
-  }
-  /** Partitioned by (bucket, pred): bucket gives idempotent per-bucket
-    * overwrite on resume; pred matches the production Iceberg layout
-    * (low-cardinality partition column, BASELINE.json:6).
+  /** The triple sink: overwrite partitioned by (bucket, pred). bucket
+    * gives idempotent per-bucket rewrite on resume; pred is the
+    * low-cardinality read-back filter (BASELINE.json:6). Dynamic
+    * overwrite is a per-write option, so only the partitions present in
+    * `triples` are replaced and the caller's session is left alone.
     */
-  override def writeTriples(triples: DataFrame, mode: SaveMode): Unit =
-    triples.write.mode(mode).partitionBy("bucket", "pred").parquet(triplesDir)
-  override def readTriples(spark: SparkSession): DataFrame =
-    spark.read.parquet(triplesDir)
+  def writeTriples(triples: DataFrame, dir: String): Unit =
+    triples.write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("bucket", "pred")
+      .parquet(dir)
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.kg.{Canonicalize, Extract, HashedFile, JsonIngest, KgPipeline}
+import graft.kg.{Canonicalize, Extract, HashedFile, JsonIngest, KgPipeline, TableIO}
 import Tables.{corpus, t}
 
 /** KG-pipeline operator demonstrations (SURVEY §2.8 typed ops + S2).
@@ -14,8 +14,8 @@ object KgQueries {
 
   private def hashedCorpus(s: org.apache.spark.sql.SparkSession, d: String) = {
     import s.implicits._
-    corpus(s, d)
-      .withColumn("file_sha", sha2(col("content"), 256))
+    TableIO.withInvariants(corpus(s, d), 1)
+      .select("repo", "path", "commit", "lang", "content", "file_sha")
       .as[HashedFile]
   }
 
@@ -270,15 +270,16 @@ object KgQueries {
     // full stage-1..4 DAG to canonicalized triples (bench headline)
     "kg_triples" -> Q.noOracle((s, d) => {
       val dict = KgPipeline.dictDataset(s)
-      val rels = Extract.scoredRelations(hashedCorpus(s, d),
-        Extract.broadcastFnAliases(s, dict))
-      Canonicalize.toTriples(rels, Canonicalize.linkMap(dict)).toDF()
+      Extract.canonicalTriples(hashedCorpus(s, d),
+        Extract.broadcastFnAliases(s, dict),
+        Canonicalize.broadcastLinkMap(s, dict)).toDF()
     }),
 
     // T1+T2+T7 oracled (round 4): the full DAG — REAL scanner, pair
     // generator, logistic scorer with its ≥0.5 keep-gate, and the REAL
-    // canonicalizing triple emitter (Canonicalize.toTriples: broadcast
-    // link joins + per-(…, fileSha) max-score dedup) — over the
+    // canonicalizing triple emitter the pipeline ships
+    // (Extract.canonicalTriples: broadcast link map inside the flatMap +
+    // per-(…, fileSha) max-score dedup) — over the
     // docCodeCorpus, reduced to per-(repo, subj, pred, obj) counts +
     // max score. The alias dictionary is every sanitized corpus word
     // (so call sites register), and the link map is SQL-expressible by
@@ -290,18 +291,17 @@ object KgQueries {
       val docs = t(s, d, "documents")
       val s1 = sanitizeWord(element_at(split(col("text"), " "), 1))
       val sn = sanitizeWord(element_at(split(col("text"), " "), -1))
-      // ONE distinct-word job feeds both dictionary artifacts: the alias
-      // broadcast and the link map (canonical = min word per length
+      // ONE distinct-word job feeds both dictionary broadcasts: the alias
+      // set and the link map (canonical = min word per length
       // group, computed on the driver over the vocab-bounded word set —
       // a second scan+window over `documents` would recompute the same
       // 31-word set inside every timed run)
       val wordSeq = docs.select(s1.as("w")).unionAll(docs.select(sn.as("w")))
         .distinct().as[String].collect().toSeq
       val aliases = s.sparkContext.broadcast(wordSeq.toSet)
-      val links = wordSeq.groupBy(_.length).valuesIterator
-        .flatMap { ws => val m = ws.min; ws.map(w => graft.kg.CanonicalLink(w, m)) }
-        .toSeq.toDS()
-      Canonicalize.toTriples(Extract.scoredRelations(docCodeCorpus(s, d), aliases), links)
+      val links = s.sparkContext.broadcast(wordSeq.groupBy(_.length).valuesIterator
+        .flatMap { ws => val m = ws.min; ws.map(_ -> m) }.toMap)
+      Extract.canonicalTriples(docCodeCorpus(s, d), aliases, links)
         .groupBy("repo", "subj", "pred", "obj")
         .agg(count(lit(1)).as("n"), round(max("score"), 6).as("max_score"))
     }),

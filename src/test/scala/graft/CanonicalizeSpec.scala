@@ -148,4 +148,25 @@ class CanonicalizeSpec extends SparkTestBase {
     assert(reps.toSeq == Seq("a000000"))
     assert(comps.count() == 2L * n)
   }
+
+  test("CC fixpoint signature tells multisets apart that xor cannot") {
+    import spark.implicits._
+    // {(a,c)x1, (b,c)x2} and {(a,c)x3}: same count, and xor cancels the
+    // (b,c) pair, so count + xor alone reports a false fixpoint
+    val twoPairs = Seq(("a", "c"), ("b", "c"), ("c", "b")).toDF("src", "dst")
+    val onePair = Seq(("a", "c"), ("c", "a"), ("a", "c")).toDF("src", "dst")
+    assert(Canonicalize.sig(twoPairs) != Canonicalize.sig(onePair))
+    // orientation and row order do not matter; an empty frame is defined
+    assert(Canonicalize.sig(twoPairs) ==
+      Canonicalize.sig(Seq(("c", "b"), ("b", "c"), ("c", "a")).toDF("src", "dst")))
+    assert(Canonicalize.sig(twoPairs.limit(0)) == ((0L, 0L, 0L)))
+  }
+
+  test("linkMap releases its cached alias-edge frame") {
+    val dict = KgPipeline.dictDataset(spark)
+    Canonicalize.linkMap(dict).collect()
+    // storageLevel is the cache manager's lookup for this plan
+    assert(Canonicalize.aliasEdges(dict).storageLevel ==
+      org.apache.spark.storage.StorageLevel.NONE)
+  }
 }

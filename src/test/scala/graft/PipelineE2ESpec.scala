@@ -121,4 +121,33 @@ class PipelineE2ESpec extends SparkTestBase {
     val res3 = runPipeline(CorpusGen.TinyFiles, resumed)
     assert(res3.triplesWritten == 0L)
   }
+
+  test("run leaves the caller's session config as it found it") {
+    // AQE keys at their non-default value, overwrite mode pinned to
+    // STATIC: a run that set any of them session-wide shows up below,
+    // and a resume that relied on a session-wide DYNAMIC overwrite
+    // would wipe the buckets committed before the crash
+    val pinned = Seq(
+      "spark.sql.sources.partitionOverwriteMode" -> "STATIC",
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.adaptive.skewJoin.enabled" -> "false")
+    val before = pinned.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      pinned.foreach { case (k, v) => spark.conf.set(k, v) }
+      def assertPinned(): Unit = pinned.foreach { case (k, v) =>
+        assert(spark.conf.get(k) == v, s"run changed $k")
+      }
+      val full = tmp("kg-conf-full"); val resumed = tmp("kg-conf-resume")
+      runPipeline(CorpusGen.TinyFiles, full)
+      assertPinned()
+      runPipeline(CorpusGen.TinyFiles, resumed, onlyBuckets = Some((0 until 8).toSet))
+      runPipeline(CorpusGen.TinyFiles, resumed)
+      assertPinned()
+      assert(readTriples(resumed) == readTriples(full))
+    } finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -23,13 +23,12 @@ class PlanSpec extends SparkTestBase {
     import spark.implicits._
     val corpus = graft.fixtures.CorpusGen.corpus(60).toDF()
     val dict = graft.kg.KgPipeline.dictDataset(spark)
-    val hashed = corpus.withColumn("file_sha", sha2(col("content"), 256))
+    val hashed = graft.kg.TableIO.withInvariants(corpus, 1)
       .select("repo", "path", "commit", "lang", "content", "file_sha")
       .as[graft.kg.HashedFile]
-    val rels = graft.kg.Extract.scoredRelations(hashed,
-      graft.kg.Extract.broadcastFnAliases(spark, dict))
-    val triples = graft.kg.Canonicalize.toTriples(rels,
-      graft.kg.Canonicalize.linkMap(dict))
+    val triples = graft.kg.Extract.canonicalTriples(hashed,
+      graft.kg.Extract.broadcastFnAliases(spark, dict),
+      graft.kg.Canonicalize.broadcastLinkMap(spark, dict))
     triples.count() // finalize AQE plan
     val shuffles = allNodes(executed(triples.toDF()))
       .collect { case e: ShuffleExchangeLike => e }
@@ -101,13 +100,12 @@ class PlanSpec extends SparkTestBase {
   test("pred-partitioned triple sink: read-back prunes partitions") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     val dir = java.nio.file.Files.createTempDirectory("graft_trip_prune").toString
-    val io = new graft.kg.LocalParquetIO("/nonexistent", s"$dir/triples")
     val triples = SparkEntry.entry(spark)
       .withColumn("bucket", pmod(xxhash64(col("fileSha")), lit(4)).cast("int"))
-    io.writeTriples(triples, org.apache.spark.sql.SaveMode.Overwrite)
-    val preds = io.readTriples(spark).select("pred").distinct().count()
+    graft.kg.TableIO.writeTriples(triples, s"$dir/triples")
+    val preds = spark.read.parquet(s"$dir/triples").select("pred").distinct().count()
     assert(preds >= 3, s"fixture too small: $preds preds")
-    val rb = io.readTriples(spark).filter(col("pred") === "imports")
+    val rb = spark.read.parquet(s"$dir/triples").filter(col("pred") === "imports")
     rb.count()
     val scan = allNodes(executed(rb)).collectFirst { case f: FileSourceScanExec => f }.get
     assert(scan.partitionFilters.exists(_.references.map(_.name).exists(_ == "pred")),
