@@ -108,7 +108,7 @@ object Bench {
     * see BENCH/BASELINE.md §skew); part 1 keeps the production-default
     * 128 MB so suite timings are comparable across rounds.
     */
-  private def session(cores: Int, smallSplits: Boolean): SparkSession = {
+  private[graft] def session(cores: Int, smallSplits: Boolean): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -262,7 +262,7 @@ object Bench {
     * local[8]) so the ~0.4 s/job scheduler overhead biases the measured
     * ceiling by ≤7%.
     */
-  private def calibRun(s: SparkSession): Double = {
+  private[graft] def calibRun(s: SparkSession): Double = {
     val t0 = System.nanoTime()
     s.range(400000).mapPartitions { it =>
       val md = java.security.MessageDigest.getInstance("SHA-256")

@@ -105,7 +105,7 @@ object Canonicalize {
     //    exactly (output = F(set) and the set is stable), so detection
     //    fires at most one round later than the old set-based test.
     // Per round: sym exchange + oriented exchange = 2 exchanges;
-    // CcProbe measured the old join form at ~6 AQE stage-jobs per round
+    // `Probe cc` measured the old join form at ~6 AQE stage-jobs per round
     // on sf0.1 (66 jobs / 211 stages for 11 rounds).
     // The whole-partition window state is the node's neighbor list —
     // spillable (UnsafeExternalSorter), unlike a collect_list array, so

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Full KG-construction DAG (BASELINE.json:6; SURVEY §3.2):
   *
-  *   corpus → sha256 invariant → [resume anti-join vs manifest]
+  *   corpus → sha256 invariant → [resume: skip committed buckets]
   *     → fused mention-scan + pair-gen + classify (narrow, broadcast dict)
   *     → canonicalize (LSH + connected components → broadcast link map,
   *       applied inside the same flatMap)
@@ -21,12 +21,13 @@ final case class KgConfig(
     triplesDir: String,
     manifestDir: String,
     runId: String,
-    nBuckets: Int = 16,
-    writeSalt: Int = 8)
+    nBuckets: Int = 16)
 
 final case class KgResult(triplesWritten: Long, bucketsCommitted: Int, wallMs: Long)
 
 object KgPipeline {
+
+  private val WriteSalt = 8 // write tasks per (bucket, pred) partition
 
   def dictDataset(spark: SparkSession): Dataset[DictEntry] = {
     import spark.implicits._
@@ -46,8 +47,7 @@ object KgPipeline {
     val hashed = TableIO.withInvariants(corpus, cfg.nBuckets)
 
     // resume: skip committed buckets (SURVEY S5/J4)
-    val done = Manifest.committedBuckets(spark, cfg.manifestDir, cfg.runId, "triples")
-    val doneSet = done.collect().map(_.getInt(0)).toSet
+    val doneSet = Manifest.committedBuckets(spark, cfg.manifestDir, cfg.runId, "triples")
     val allTodo = (0 until cfg.nBuckets).filterNot(doneSet).toSet
     val todoBuckets = onlyBuckets.map(_ intersect allTodo).getOrElse(allTodo)
     if (todoBuckets.isEmpty)
@@ -64,14 +64,13 @@ object KgPipeline {
     val fnAliases = Extract.broadcastFnAliases(spark, dict)
     val canonB = Canonicalize.broadcastLinkMap(spark, dict)
     val triples = Extract.canonicalTriples(todo, fnAliases, canonB).toDF()
-      .withColumn("bucket",
-        pmod(xxhash64(col("fileSha")), lit(cfg.nBuckets)).cast("int"))
+      .withColumn("bucket", TableIO.bucketOf(col("fileSha"), cfg.nBuckets))
 
     // partitioned-write hygiene (SURVEY §4.4(4)): repartition on the
     // partition columns + salt so hot preds don't serialize one task
     val out = triples.repartition(
       col("bucket"), col("pred"),
-      pmod(xxhash64(col("fileSha")), lit(cfg.writeSalt)))
+      pmod(xxhash64(col("fileSha")), lit(WriteSalt)))
     TableIO.writeTriples(out, cfg.triplesDir)
 
     // lineage from what actually landed on disk (SURVEY A7/S5)

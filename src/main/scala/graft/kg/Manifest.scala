@@ -7,7 +7,7 @@ import graft.functions.XorDigest
 /** Per-partition lineage + checkpointed resumability (BASELINE.json:6,14;
   * SURVEY S5/A7). The manifest is an append-only parquet table; a bucket
   * is COMMITTED once its manifest row (status='committed') exists. Resume
-  * = anti-join the corpus against committed buckets; the triple writer
+  * = filter the corpus to uncommitted buckets; the triple writer
   * uses dynamic partition overwrite so a half-written (uncommitted)
   * bucket is idempotently rewritten on the next attempt.
   */
@@ -38,20 +38,17 @@ object Manifest {
       .write.mode("append").parquet(manifestDir)
   }
 
-  /** Buckets already committed for (runId, stage) — small; broadcast by
-    * the caller's anti-join.
-    */
+  /** Buckets already committed for (runId, stage). */
   def committedBuckets(spark: SparkSession, manifestDir: String,
-                       runId: String, stage: String): DataFrame = {
-    val empty = spark.range(0).select(col("id").cast("int").as("bucket"))
+                       runId: String, stage: String): Set[Int] = {
     // Hadoop FileSystem, not java.io.File: the manifest dir may live on
     // any supported filesystem (HDFS/S3A/local) in production
     val p = new org.apache.hadoop.fs.Path(manifestDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) empty
+    if (!fs.exists(p)) Set.empty
     else spark.read.parquet(manifestDir)
       .filter(col("runId") === runId && col("stage") === stage &&
         col("status") === "committed")
-      .select(col("bucket")).distinct()
+      .select(col("bucket")).distinct().collect().map(_.getInt(0)).toSet
   }
 }

@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -35,7 +35,13 @@ object TableIO {
         length(col("content")) > 0 &&
         length(col("content")) <= MaxContentChars)
       .withColumn("file_sha", sha2(col("content"), 256))
-      .withColumn("bucket", pmod(xxhash64(col("file_sha")), lit(nBuckets)).cast("int"))
+      .withColumn("bucket", bucketOf(col("file_sha"), nBuckets))
+
+  /** The routing rule: a file's bucket is a pure function of its sha256,
+    * so the corpus row and every triple it yields land in the same bucket.
+    */
+  def bucketOf(fileSha: Column, nBuckets: Int): Column =
+    pmod(xxhash64(fileSha), lit(nBuckets)).cast("int")
 
   /** The triple sink: overwrite partitioned by (bucket, pred). bucket
     * gives idempotent per-bucket rewrite on resume; pred is the

@@ -141,7 +141,7 @@ object KgQueries {
       |FROM mapped GROUP BY 1, 2, 3, 4""".stripMargin
 
   /** Per-user event-chain edge set (consecutive event_ids linked) — the
-    * input of `cc_components`, shared with tools.CcProbe so the probe
+    * input of `cc_components`, shared with `Probe cc` so the probe
     * measures exactly the production edge build.
     */
   def eventChainEdges(s: org.apache.spark.sql.SparkSession,

@@ -98,6 +98,17 @@ class PipelineE2ESpec extends SparkTestBase {
       .select("bucket", "rowCount", "contentDigest").collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
     assert(m1 == m2)
+    // the xor digest is sound only while written rows are distinct: no
+    // 7-tuple lands twice, and each bucket's rowCount is its distinct count
+    for (d <- Seq(d1, d2)) {
+      val rows = spark.read.parquet(s"$d/triples").select((tripleKey :+ "bucket").map(col): _*)
+      assert(rows.count() == rows.distinct().count(), s"duplicate triples in $d")
+      val distinctPerBucket = rows.distinct().groupBy("bucket").count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      spark.read.parquet(s"$d/manifest").select("bucket", "rowCount").collect()
+        .foreach(r => assert(r.getLong(1) == distinctPerBucket.getOrElse(r.getInt(0), 0L),
+          s"bucket ${r.getInt(0)} rowCount != its distinct count in $d"))
+    }
   }
 
   test("resume: crash at half the buckets, rerun → identical output, no reprocess") {
