@@ -1,7 +1,9 @@
 package graft.kg
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, row_number}
 
 /** Stages 1–3: mention detection (SURVEY T1), candidate pair generation
   * (J5/J6), relation classification (T2) — implementing SPEC.md §2–§3.
@@ -154,34 +156,67 @@ object Extract {
     }
   }
 
+  /** The 7-tuple that identifies a triple; `score` rides along. */
+  private[kg] val TripleKey: Seq[String] = Seq("subj", "pred", "obj", "repo", "path", "commit", "fileSha")
+
   /** Stages 1–4 fused: corpus → CANONICAL triples in one narrow flatMap.
     * The norm→canonical link map is broadcast alongside the function
     * dictionary (BASELINE.json:6 "mapPartitions-backed broadcast
-    * dictionaries"), so canonicalization costs zero extra stages — the
-    * only shuffle left downstream is the global triple dedup. This is
-    * the one canonicalization path: KgPipeline, SparkEntry.entry and the
-    * oracled `kg_triples_counts` key all run it.
+    * dictionaries"), so canonicalization costs zero extra stages. Score
+    * variants of one 7-tuple within a file (the same call edge at two
+    * distances, or two norms of one canonical) collapse here to their
+    * max, so each file emits every 7-tuple once. Copies across rows —
+    * the same file delivered twice — are left to `dedup`.
     */
-  def canonicalTriples(ds: Dataset[HashedFile],
-                       fnAliases: Broadcast[Set[String]],
-                       canon: Broadcast[Map[String, String]]): Dataset[Triple] = {
+  def triples(ds: Dataset[HashedFile],
+              fnAliases: Broadcast[Set[String]],
+              canon: Broadcast[Map[String, String]]): Dataset[Triple] = {
     val spark = ds.sparkSession
     import spark.implicits._
     ds.mapPartitions { it =>
       val dict = fnAliases.value
       val c = canon.value
       it.flatMap { f =>
-        relations(f, dict).map { r =>
-          Triple(c.getOrElse(r.subjNorm, r.subjNorm), r.pred,
-            c.getOrElse(r.objNorm, r.objNorm),
-            r.repo, r.path, r.commit, r.fileSha, r.score)
-        }.distinct
+        val best = scala.collection.mutable.LinkedHashMap.empty[(String, String, String), Double]
+        relations(f, dict).foreach { r =>
+          val k = (c.getOrElse(r.subjNorm, r.subjNorm), r.pred, c.getOrElse(r.objNorm, r.objNorm))
+          best.updateWith(k)(prev => Some(prev.fold(r.score)(math.max(_, r.score))))
+        }
+        best.iterator.map { case ((s, p, o), sc) =>
+          Triple(s, p, o, f.repo, f.path, f.commit, f.file_sha, sc)
+        }
       }
-    }.groupBy("subj", "pred", "obj", "repo", "path", "commit", "fileSha")
-      // max, not dropDuplicates: duplicate triples may carry different
-      // scores (same call at different distances) — keep it deterministic
-      .agg(org.apache.spark.sql.functions.max("score").as("score"))
-      .as[Triple]
+    }
+  }
+
+  /** The one triple dedup: keep the max-score row per 7-tuple. The rows
+    * are hash-repartitioned on `clusterBy`, then `row_number()` over
+    * (`clusterBy` ++ 7-tuple) ordered by score desc keeps rank 1 — one
+    * exchange and one sort, no hash-aggregate map. Precondition: every
+    * `clusterBy` column is a function of (fileSha, pred), so all copies
+    * of a 7-tuple share a partition. The output is sorted by
+    * (`clusterBy`, 7-tuple) within each partition, so a writer that
+    * partitions by a prefix of `clusterBy` adds no sort of its own.
+    */
+  def dedup(rows: DataFrame, clusterBy: Seq[String]): DataFrame = {
+    val key = (clusterBy ++ TripleKey.filterNot(clusterBy.contains)).map(col)
+    rows.repartition(clusterBy.map(col): _*)
+      .withColumn("rank", row_number().over(Window.partitionBy(key: _*).orderBy(col("score").desc)))
+      .filter(col("rank") === 1)
+      .drop("rank")
+  }
+
+  /** Canonical triples, each 7-tuple once with its max score: `triples`
+    * then `dedup` clustered on fileSha. This is the one canonicalization
+    * path: SparkEntry.entry, the oracled `kg_triples_counts` key and the
+    * streaming sink run it, and KgPipeline runs the same two functions
+    * with its write columns as the cluster key.
+    */
+  def canonicalTriples(ds: Dataset[HashedFile],
+                       fnAliases: Broadcast[Set[String]],
+                       canon: Broadcast[Map[String, String]]): Dataset[Triple] = {
+    import ds.sparkSession.implicits._
+    dedup(triples(ds, fnAliases, canon).toDF(), Seq("fileSha")).as[Triple]
   }
 
   /** Broadcast the function-alias set (SURVEY S3). */

@@ -8,14 +8,18 @@ import org.apache.spark.sql.functions._
   *   corpus → sha256 invariant → [resume: skip committed buckets]
   *     → fused mention-scan + pair-gen + classify (narrow, broadcast dict)
   *     → canonicalize (LSH + connected components → broadcast link map,
-  *       applied inside the same flatMap)
-  *     → distinct triples → salted repartition → partitioned write
+  *       applied inside the same flatMap; per-file max score)
+  *     → salted repartition + keep-max triple dedup → partitioned write
   *     → per-bucket lineage manifest
   *
-  * Scale posture: the only shuffles are (1) triple dedup, (2) the salted
-  * repartition feeding the partitioned write, (3) the tiny dictionary-side
-  * CC loop. The 100KB `content` column never crosses a shuffle — it dies
-  * inside the narrow flatMap (SURVEY §7.4(4)).
+  * Scale posture: the corpus-proportional data crosses ONE exchange, the
+  * salted (bucket, pred, salt) repartition. It serves both the global
+  * triple dedup and the partitioned write: bucket and salt are functions
+  * of fileSha, so every copy of a 7-tuple lands in one task, and the
+  * dedup's sort already orders rows the way the writer needs. Besides
+  * it, only the tiny dictionary-side CC loop shuffles. The 100KB
+  * `content` column never crosses a shuffle — it dies inside the narrow
+  * flatMap (SURVEY §7.4(4)).
   */
 final case class KgConfig(
     triplesDir: String,
@@ -59,30 +63,32 @@ object KgPipeline {
       .as[HashedFile]
 
     // stages 1–4 fused per file: mention scan + pair-gen + classify +
-    // broadcast-map canonicalization in ONE narrow flatMap; the global
-    // triple dedup is the only corpus-proportional shuffle before write
+    // broadcast-map canonicalization in ONE narrow flatMap
     val fnAliases = Extract.broadcastFnAliases(spark, dict)
     val canonB = Canonicalize.broadcastLinkMap(spark, dict)
-    val triples = Extract.canonicalTriples(todo, fnAliases, canonB).toDF()
+    val triples = Extract.triples(todo, fnAliases, canonB).toDF()
       .withColumn("bucket", TableIO.bucketOf(col("fileSha"), cfg.nBuckets))
+      .withColumn("salt", pmod(xxhash64(col("fileSha")), lit(WriteSalt)))
 
-    // partitioned-write hygiene (SURVEY §4.4(4)): repartition on the
-    // partition columns + salt so hot preds don't serialize one task
-    val out = triples.repartition(
-      col("bucket"), col("pred"),
-      pmod(xxhash64(col("fileSha")), lit(WriteSalt)))
+    // the one exchange (SURVEY §4.4(4)): repartition on the partition
+    // columns + salt so hot preds don't serialize one task; the dedup
+    // runs inside it, and its sort order starts with (bucket, pred)
+    val out = Extract.dedup(triples, Seq("bucket", "pred", "salt")).drop("salt")
     TableIO.writeTriples(out, cfg.triplesDir)
 
-    // lineage from what actually landed on disk (SURVEY A7/S5)
+    // lineage from what actually landed on disk (SURVEY A7/S5), read
+    // back once; todo buckets that got no triples commit as (0, 0)
     val written = spark.read.parquet(cfg.triplesDir)
       .filter(col("bucket").isin(todoBuckets.toSeq: _*))
-    val stats = Manifest.bucketStats(written)
-    val allTodoDf = todoBuckets.toSeq.sorted.toDF("bucket")
-    val fullStats = allTodoDf.join(stats, Seq("bucket"), "left")
-      .na.fill(0L, Seq("rowCount", "contentDigest"))
-    val nWritten = fullStats.agg(sum("rowCount")).first().getLong(0)
+    val landed = Manifest.bucketStats(written).collect()
+      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val stats = todoBuckets.toSeq.sorted.map { b =>
+      val (rowCount, digest) = landed.getOrElse(b, (0L, 0L))
+      (b, rowCount, digest)
+    }
+    val nWritten = stats.map(_._2).sum
     Manifest.write(spark, cfg.manifestDir, cfg.runId, "triples",
-      fullStats, attempt = 1, startedAtMs = t0,
+      stats.toDF("bucket", "rowCount", "contentDigest"), attempt = 1, startedAtMs = t0,
       wallMs = System.currentTimeMillis() - t0)
     KgResult(nWritten, doneSet.size + todoBuckets.size,
       System.currentTimeMillis() - t0)

@@ -19,9 +19,7 @@ object Manifest {
     */
   def bucketStats(triples: DataFrame): DataFrame =
     triples
-      .withColumn("rowHash",
-        xxhash64(col("subj"), col("pred"), col("obj"), col("repo"),
-          col("path"), col("commit"), col("fileSha")))
+      .withColumn("rowHash", xxhash64(Extract.TripleKey.map(col): _*))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("rowCount"), XorDigest(col("rowHash")).as("contentDigest"))
 

@@ -110,17 +110,27 @@ object Oracle {
 
   /** Golden triples for a corpus, per SPEC.md §3/§5. */
   def triples(corpus: Seq[CodeFile],
-              dict: Seq[(String, Long, String, String)]): Set[GTriple] = {
+              dict: Seq[(String, Long, String, String)]): Set[GTriple] =
+    scoredTriples(corpus, dict).keySet
+
+  /** Golden triples with their score: a nearest-def `calls` edge scores
+    * the SPEC.md §3 logistic of its line distance, every other edge 1.0,
+    * and a triple emitted more than once keeps its max.
+    */
+  def scoredTriples(corpus: Seq[CodeFile],
+                    dict: Seq[(String, Long, String, String)]): Map[GTriple, Double] = {
     val canon = canonicalMap(dict)
     val fnAliases = dict.collect { case (n, _, _, "function") => n }.toSet
     def c(n: String): String = canon.getOrElse(n, n)
-    val out = scala.collection.mutable.Set[GTriple]()
+    val out = scala.collection.mutable.Map[GTriple, Double]()
     for (f <- corpus) {
       val ms = mentions(f, fnAliases)
       val sha = ms.headOption.map(_.fileSha).getOrElse(sha256Hex(f.content))
       val fileSym = s"${f.repo}:${f.path}"
-      def t(s: String, p: String, o: String): Unit =
-        out += GTriple(s, p, o, f.repo, f.path, f.commit, sha)
+      def t(s: String, p: String, o: String, score: Double = 1.0): Unit = {
+        val k = GTriple(s, p, o, f.repo, f.path, f.commit, sha)
+        out(k) = math.max(score, out.getOrElse(k, score))
+      }
       val byLine = ms.groupBy(_.line)
       for (m <- ms) m.kind match {
         case "import" => t(fileSym, "imports", c(norm(m.surface)))
@@ -141,10 +151,10 @@ object Oracle {
           val d = call.line - nearest.line
           val score = 1.0 / (1.0 + math.exp(-(4.0 - 0.1 * d)))
           if (score >= 0.5)
-            t(c(norm(nearest.surface)), "calls", c(norm(call.surface)))
+            t(c(norm(nearest.surface)), "calls", c(norm(call.surface)), score)
         }
       }
     }
-    out.toSet
+    out.toMap
   }
 }

@@ -72,6 +72,69 @@ class PipelineE2ESpec extends SparkTestBase {
       s"small-corpus divergence: spurious=${(got -- want).take(2)} missed=${(want -- got).take(2)}")
   }
 
+  test("duplicate corpus: run and canonicalTriples equal the scored oracle") {
+    import spark.implicits._
+    // one file where a single canonical `calls` edge appears at two line
+    // distances (charliefn at 5 and 6) and through two norms the link map
+    // merges into one canonical (bravofn at distance 1, bravof at 4)
+    val edgeFile = CodeFile("org/edges", "src/edges.py", "c0", "python",
+      "def alphafn(a, b):\n    bravofn(a)\n    x = 1\n    y = 2\n" +
+        "    bravof(b)\n    charliefn(a)\n    charliefn(b)\n")
+    val files = CorpusGen.corpus(40) :+ edgeFile
+    val redelivered = files.take(8) :+ edgeFile
+    val forks = (files.slice(4, 12) :+ edgeFile)
+      .map(f => f.copy(repo = s"${f.repo}-fork", path = s"fork/${f.path}"))
+    val corpus = files ++ redelivered ++ forks
+    val dict = KgPipeline.dictDataset(spark)
+    val fnAliases = Extract.broadcastFnAliases(spark, dict)
+    val canonB = Canonicalize.broadcastLinkMap(spark, dict)
+
+    // the fixture really has score variants of one edge within a file
+    val edgeRels = Extract.relations(
+      HashedFile(edgeFile.repo, edgeFile.path, edgeFile.commit, edgeFile.lang,
+        edgeFile.content, Oracle.sha256Hex(edgeFile.content)), fnAliases.value)
+      .map(r => (canonB.value.getOrElse(r.subjNorm, r.subjNorm), r.pred,
+        canonB.value.getOrElse(r.objNorm, r.objNorm), r.score))
+    for (callee <- Seq("bravofn", "charliefn"))
+      assert(edgeRels.filter(r => r._1 == "alphafn" && r._3 == callee).map(_._4).distinct.size == 2,
+        s"fixture lost the two-distance alphafn -> $callee edge: $edgeRels")
+
+    def keyed(rows: Seq[Triple]): Map[Seq[String], Double] = {
+      val m = rows.map(t => Seq(t.subj, t.pred, t.obj, t.repo, t.path, t.commit, t.fileSha) -> t.score).toMap
+      assert(m.size == rows.size, s"${rows.size - m.size} duplicate 7-tuples")
+      m
+    }
+    val want = Oracle.scoredTriples(corpus, Vocab.dictRows).map { case (t, sc) =>
+      Seq(t.subj, t.pred, t.obj, t.repo, t.path, t.commit, t.fileSha) -> sc
+    }
+
+    val hashed = TableIO.withInvariants(corpus.toDF(), 1)
+      .select("repo", "path", "commit", "lang", "content", "file_sha").as[HashedFile]
+    val viaCanonical = keyed(Extract.canonicalTriples(hashed, fnAliases, canonB).collect().toSeq)
+    assert(viaCanonical == want,
+      s"canonicalTriples: spurious=${(viaCanonical.toSet -- want).take(3)} " +
+        s"missed=${(want.toSet -- viaCanonical).take(3)}")
+
+    val dir = tmp("kg-dup")
+    val res = KgPipeline.run(spark, corpus.toDF(), dict, KgConfig(s"$dir/triples", s"$dir/manifest", "r1"))
+    val viaRun = keyed(spark.read.parquet(s"$dir/triples").select("subj", "pred", "obj", "repo", "path",
+      "commit", "fileSha", "score").as[Triple].collect().toSeq)
+    assert(viaRun == want,
+      s"KgPipeline.run: spurious=${(viaRun.toSet -- want).take(3)} missed=${(want.toSet -- viaRun).take(3)}")
+    assert(res.triplesWritten == want.size)
+
+    // the flatMap emits each 7-tuple once per corpus row: its count is
+    // exactly the number of copies of the file it came from
+    val copies = corpus.groupBy(f => (f.repo, f.path, f.commit, Oracle.sha256Hex(f.content)))
+      .map { case (k, fs) => k -> fs.size }
+    val emitted = Extract.triples(hashed, fnAliases, canonB).collect().toSeq
+      .groupBy(t => (t.subj, t.pred, t.obj, t.repo, t.path, t.commit, t.fileSha))
+    emitted.foreach { case (k, ts) =>
+      assert(ts.size == copies((k._4, k._5, k._6, k._7)), s"$k emitted ${ts.size} times")
+    }
+    assert(emitted.values.map(_.size).sum > want.size, "fixture has no cross-row duplicates")
+  }
+
   test("per-row sha256 invariant holds for 100% of corpus rows") {
     import spark.implicits._
     val hashed = TableIO.withInvariants(corpusDf(CorpusGen.TinyFiles), 16)
@@ -109,6 +172,19 @@ class PipelineE2ESpec extends SparkTestBase {
         .foreach(r => assert(r.getLong(1) == distinctPerBucket.getOrElse(r.getInt(0), 0L),
           s"bucket ${r.getInt(0)} rowCount != its distinct count in $d"))
     }
+  }
+
+  test("manifest commits every todo bucket, empty ones as (0, 0)") {
+    val dir = tmp("kg-sparse")
+    val res = runPipeline(2, dir)
+    val m = spark.read.parquet(s"$dir/manifest").select("bucket", "rowCount", "contentDigest")
+      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(m.keySet == (0 until 16).toSet)
+    val landed = spark.read.parquet(s"$dir/triples").select("bucket").distinct()
+      .collect().map(_.getInt(0)).toSet
+    assert(landed.nonEmpty && landed.size < 16, s"fixture fills $landed")
+    (0 until 16).filterNot(landed).foreach(b => assert(m(b) == ((0L, 0L)), s"bucket $b"))
+    assert(res.triplesWritten == m.values.map(_._1).sum)
   }
 
   test("resume: crash at half the buckets, rerun → identical output, no reprocess") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.exchange.{Exchange, BroadcastExchangeLike, ShuffleExchangeLike}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.{SparkPlan, QueryExecution}
 
 /** Physical-plan discipline tests (SURVEY §4.4, §7.4(4)): the 100KB
@@ -16,6 +16,7 @@ class PlanSpec extends SparkTestBase {
 
   private def allNodes(p: SparkPlan): Seq[SparkPlan] = p match {
     case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
+    case q: QueryStageExec => allNodes(q.plan)
     case _ => p +: p.children.flatMap(allNodes)
   }
 
@@ -38,6 +39,42 @@ class PlanSpec extends SparkTestBase {
       assert(!cols.contains("content"),
         s"content crosses a shuffle: ${cols.mkString(",")}")
     }
+  }
+
+  test("KG write plan: one exchange, one sort, no hash aggregate") {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = java.nio.file.Files.createTempDirectory("graft_write_plan").toString
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        allNodes(qe.executedPlan).foreach {
+          case w: DataWritingCommandExec => w.cmd match {
+            case i: InsertIntoHadoopFsRelationCommand if i.outputPath.getName == "triples" => writes.add(w)
+            case _ => ()
+          }
+          case _ => ()
+        }
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      import spark.implicits._
+      graft.kg.KgPipeline.run(spark, graft.fixtures.CorpusGen.corpus(60).toDF(),
+        graft.kg.KgPipeline.dictDataset(spark),
+        graft.kg.KgConfig(s"$dir/triples", s"$dir/manifest", "r1"))
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size == 1, s"expected one triple write, saw ${writes.size}")
+    val plan = allNodes(writes.peek())
+    val tree = writes.peek().treeString
+    assert(plan.count(_.isInstanceOf[ShuffleExchangeLike]) == 1, s"not one exchange:\n$tree")
+    assert(!plan.exists(p => p.isInstanceOf[HashAggregateExec] || p.isInstanceOf[ObjectHashAggregateExec]),
+      s"hash aggregate in the write plan:\n$tree")
+    assert(plan.count(_.isInstanceOf[SortExec]) == 1, s"not one sort:\n$tree")
   }
 
   test("scan_parquet pushes filter and prunes columns") {
