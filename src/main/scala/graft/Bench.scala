@@ -242,17 +242,15 @@ object Bench {
     * (function-alias broadcast + canonical link map) are corpus-
     * independent per-cluster setup — prepared once per session by the
     * caller, amortized over every batch exactly as a production
-    * deployment would (BASELINE.json:6 "broadcast dictionaries").
+    * deployment would (BASELINE.json:6 "broadcast dictionaries"). The
+    * corpus is read through `TableIO.hashedFiles`, the pipeline's input
+    * guards and sha256.
     */
   private def kgTriples(s: SparkSession, corpusDir: String,
                         fnAliases: org.apache.spark.broadcast.Broadcast[Set[String]],
                         canon: org.apache.spark.broadcast.Broadcast[Map[String, String]]): Long = {
-    import s.implicits._
-    val hashed = s.read.parquet(corpusDir)
-      .withColumn("file_sha", sha2(col("content"), 256))
-      .select("repo", "path", "commit", "lang", "content", "file_sha")
-      .as[HashedFile]
-    Extract.canonicalTriples(hashed, fnAliases, canon).count()
+    Extract.canonicalTriples(TableIO.hashedFiles(s.read.parquet(corpusDir)), fnAliases, canon)
+      .count()
   }
 
   /** Hardware-ceiling calibration: an embarrassingly parallel job (per-

@@ -16,11 +16,8 @@ object SparkEntry {
     import spark.implicits._
     val corpus = fixtures.CorpusGen.corpus(fixtures.CorpusGen.TinyFiles).toDF()
     val dict = kg.KgPipeline.dictDataset(spark)
-    val hashed = kg.TableIO.withInvariants(corpus, 1)
-      .select("repo", "path", "commit", "lang", "content", "file_sha")
-      .as[kg.HashedFile]
-    kg.Extract.canonicalTriples(hashed, kg.Extract.broadcastFnAliases(spark, dict),
-      kg.Canonicalize.broadcastLinkMap(spark, dict)).toDF()
+    kg.Extract.canonicalTriples(kg.TableIO.hashedFiles(corpus),
+      kg.Extract.broadcastFnAliases(spark, dict), kg.Canonicalize.broadcastLinkMap(spark, dict)).toDF()
   }
 
   private val all: Map[String, Q] =

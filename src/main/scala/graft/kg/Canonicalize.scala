@@ -4,10 +4,17 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Hashing
 
-/** Entity canonicalization (SPEC.md §4; BASELINE.json:6):
-  * MinHash-LSH blocking over dictionary norms (SURVEY J7) → levenshtein
-  * verify → union with same-entity edges → connected components →
-  * cluster representative = min canonical.
+/** Entity canonicalization (SPEC.md §4; BASELINE.json:6): the alias
+  * graph is same-entity edges plus every pair of dict norms within
+  * levenshtein 1; each norm maps to the min canonical of its connected
+  * component.
+  *
+  * The dictionary is broadcast-scale by contract, so the link map is
+  * built on the driver from one collect: a union-find over norm ids fed
+  * by `forEachAliasEdge`, whose levenshtein edges come from exact
+  * deletion neighbourhoods (no blocking, no verify). `lshEdges` is the
+  * J7 MinHash blocking operator; `connectedComponents` is the
+  * distributed CC the corpus-scale keys use.
   */
 object Canonicalize {
 
@@ -15,18 +22,19 @@ object Canonicalize {
   val MinHashK = 24
   val Bands = 12
 
-  /** LSH-blocked candidate alias pairs, verified with levenshtein ≤ 1
-    * (SPEC.md §4). Blocking: 3-gram shingles → 24-hash MinHash → 12
-    * bands × 2 rows → capped self equi-join on (band, hash) → verify.
+  /** LSH-blocked candidate alias pairs, verified with levenshtein ≤ 1:
+    * the J7 `join_lsh_block` operator key, not the link map's path
+    * (`forEachAliasEdge` is exact). Blocking: 3-gram shingles → 24-hash
+    * MinHash → 12 bands × 2 rows → capped self equi-join on (band, hash)
+    * → verify.
     * At dictionary scale the join keys are (bandIdx, bandHash) — never
     * an all-pairs cross product; Lsh.DictBucketCap bounds a degenerate
     * hot bucket. NOTE: the over-cap chain fallback keeps the bucket
     * connected only PRE-verification — a chain link whose adjacent norms
     * differ by >1 edit is dropped by the levenshtein filter, so a
     * degenerate >cap bucket can fragment a cluster the uncapped join
-    * would have kept whole (bounded recall loss, accepted: the 12 bands
-    * give 12 independent chain orders, and same-entity edges still
-    * connect shared entities regardless).
+    * would have kept whole (bounded recall loss: the 12 bands give 12
+    * independent chain orders).
     */
   def lshEdges(dict: Dataset[DictEntry]): DataFrame = {
     val spark = dict.sparkSession
@@ -42,21 +50,6 @@ object Canonicalize {
       .select($"a_norm".as("src"), $"b_norm".as("dst"))
       .filter(levenshtein($"src", $"dst") <= 1)
   }
-
-  /** Same-entity edges: chain each entity's sorted norms (star to the
-    * minimum norm — enough for connectivity).
-    */
-  def sameEntityEdges(dict: Dataset[DictEntry]): DataFrame = {
-    val spark = dict.sparkSession
-    import spark.implicits._
-    dict.groupBy($"entityId").agg(sort_array(collect_set($"norm")).as("norms"))
-      .select(explode(expr("transform(slice(norms, 2, size(norms)), x -> struct(norms[0] as src, x as dst))")).as("e"))
-      .select($"e.src", $"e.dst")
-  }
-
-  /** Full alias-similarity edge set per SPEC.md §4. */
-  def aliasEdges(dict: Dataset[DictEntry]): DataFrame =
-    lshEdges(dict).unionByName(sameEntityEdges(dict)).distinct()
 
   /** Connected components by alternating large-star/small-star
     * contraction (Kiveris et al., "Connected Components in MapReduce and
@@ -240,74 +233,118 @@ object Canonicalize {
     labels
   }
 
-  /** Edge count up to which connected components run as a driver-local
-    * union-find instead of the iterative distributed loop. The alias
-    * dictionary is broadcast-scale by contract (BASELINE.json:6
-    * "broadcast dictionaries"), so its similarity graph is tiny — paying
-    * ~10 Spark jobs of fixed latency for it would cap the pipeline's
-    * N→4N scaling efficiency. Large graphs still take the distributed
-    * path (property-tested directly).
-    */
-  val SmallGraphEdges = 200000L
+  /** Distinct non-null dict norms, sorted, so id order is string order. */
+  private def normIds(rows: Seq[DictEntry]): (Array[String], java.util.HashMap[String, Integer]) = {
+    val norms = rows.iterator.map(_.norm).filter(_ != null).distinct.toArray.sorted
+    val id = new java.util.HashMap[String, Integer]
+    norms.indices.foreach(i => id.put(norms(i), i))
+    (norms, id)
+  }
 
-  /** Driver-local union-find over a small collected edge list; output
-    * matches connectedComponents (comp = min node string).
+  /** The alias graph of SPEC.md §4 as a spanning edge set: calls
+    * `link(i, j)` on norm ids so that two norms are connected iff they
+    * share an entity or are chained by levenshtein ≤ 1 steps, and every
+    * call's pair shares an entity or is within levenshtein 1.
+    *
+    *  - same entity: each norm links to its entity's min norm;
+    *  - levenshtein 1, one deletion position `p` at a time:
+    *    - substitution: two norms of one length that agree once position
+    *      `p` is deleted differ only at `p`; each links to the min
+    *      holder of that deletion key;
+    *    - insertion/deletion: a norm whose position-`p` deletion is
+    *      itself a dict norm links to it.
+    *
+    * Keys are per position, so `ab`/`ba` (levenshtein 2, keys `b`/`a` at
+    * swapped positions) never link. The key map holds one position at a
+    * time: driver memory is O(|dict|), the order of the link map itself.
+    * Levenshtein is over UTF-16 chars, as in `Oracle.levenshtein`.
+    * Linking to minima makes every group a star on its min norm, the
+    * shape `connectedComponents` contracts in the fewest rounds.
     */
-  def localComponents(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val es = edges.select("src", "dst").as[(String, String)].collect()
-    val parent = scala.collection.mutable.Map.empty[String, String]
-    def find(x: String): String = {
-      var r = parent.getOrElseUpdate(x, x)
-      while (parent(r) != r) r = parent(r)
+  private def forEachAliasEdge(rows: Seq[DictEntry], norms: Array[String],
+                               id: java.util.HashMap[String, Integer])
+                              (link: (Int, Int) => Unit): Unit = {
+    val minOfEntity = new java.util.HashMap[Long, Int]
+    val named = rows.filter(_.norm != null)
+    named.foreach(r => minOfEntity.merge(r.entityId, id.get(r.norm), math.min(_, _)))
+    named.foreach { r =>
+      val (m, i) = (minOfEntity.get(r.entityId), id.get(r.norm).intValue)
+      if (m != i) link(m, i)
+    }
+    // longest first (a stable sort: ids ascend within a length), so
+    // position p visits only the prefix of norms longer than p, and the
+    // first holder of a key is its min norm
+    val byLen = norms.indices.sortBy(i => -norms(i).length).toArray
+    var p = 0
+    while (byLen.nonEmpty && p < norms(byLen(0)).length) {
+      val firstOfKey = new java.util.HashMap[String, Integer]
+      var k = 0
+      while (k < byLen.length && norms(byLen(k)).length > p) {
+        val i = byLen(k)
+        val s = norms(i)
+        val key = s.substring(0, p) + s.substring(p + 1)
+        val shorter = id.get(key)
+        if (shorter != null) link(shorter, i)
+        val twin = firstOfKey.putIfAbsent(key, i)
+        if (twin != null) link(twin, i)
+        k += 1
+      }
+      p += 1
+    }
+  }
+
+  /** The alias edges `forEachAliasEdge` emits, each once as
+    * (src < dst): the edge set the link map's union-find consumes.
+    */
+  def aliasEdgePairs(rows: Seq[DictEntry]): Seq[(String, String)] = {
+    val (norms, id) = normIds(rows)
+    val out = scala.collection.mutable.LinkedHashSet.empty[(String, String)]
+    forEachAliasEdge(rows, norms, id) { (i, j) =>
+      val (a, b) = (norms(i), norms(j))
+      out += (if (a < b) (a, b) else (b, a))
+    }
+    out.toSeq
+  }
+
+  /** The alias graph as a DataFrame(src, dst): the same edges the link
+    * map is built from, for the CC operator keys and traced builds.
+    */
+  def aliasEdges(dict: Dataset[DictEntry]): DataFrame = {
+    import dict.sparkSession.implicits._
+    aliasEdgePairs(dict.collect().toSeq).toDF("src", "dst")
+  }
+
+  /** norm → canonical link map over collected dict rows: union-find over
+    * the alias graph, representative = min canonical over the
+    * component's rows. Pure and driver-local; a norm with no edge (a
+    * single-alias entity) still maps to its own entity's canonical.
+    */
+  def links(rows: Seq[DictEntry]): Map[String, String] = {
+    val (norms, id) = normIds(rows)
+    val parent = Array.range(0, norms.length)
+    def find(x: Int): Int = {
       var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
+      while (parent(c) != c) { parent(c) = parent(parent(c)); c = parent(c) }
+      c
     }
-    es.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    forEachAliasEdge(rows, norms, id) { (i, j) =>
+      val (a, b) = (find(i), find(j))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
     }
-    parent.keys.toSeq.map(n => (n, find(n))).toDF("node", "comp")
+    val rep = new Array[String](norms.length)
+    rows.foreach { r =>
+      if (r.norm != null && r.canonical != null) {
+        val c = find(id.get(r.norm))
+        if (rep(c) == null || r.canonical < rep(c)) rep(c) = r.canonical
+      }
+    }
+    norms.indices.map(i => norms(i) -> rep(find(i))).toMap
   }
 
-  /** norm → canonical representative map (CanonicalLink rows):
-    * representative canonical = min canonical within the component.
-    */
-  def linkMap(dict: Dataset[DictEntry]): Dataset[CanonicalLink] = {
-    val spark = dict.sparkSession
-    import spark.implicits._
-    // one materialization shared by the count and the component pass;
-    // both paths have read it by the time they return (localComponents
-    // collects, connectedComponents checkpoints), so release it here
-    val edges = aliasEdges(dict).cache()
-    val edgeComps =
-      try {
-        if (edges.count() <= SmallGraphEdges) localComponents(edges)
-        else connectedComponents(edges)
-      } finally edges.unpersist()
-    // Seed the component set with EVERY dict norm: a single-alias entity
-    // produces no edges (sameEntityEdges needs >=2 norms, lshEdges needs a
-    // lev<=1 partner), yet SPEC.md §4 / Oracle.canonicalMap still map it to
-    // its own canonical — which may differ from the norm itself. Without
-    // the seed, canon(norm) would fall back to the raw norm.
-    val comps = dict.select($"norm".as("node")).distinct()
-      .join(edgeComps, Seq("node"), "left")
-      .select($"node", coalesce($"comp", $"node").as("comp"))
-    val withCanon = comps.join(dict.select($"norm".as("node"), $"canonical"), Seq("node"))
-    val repOfComp = withCanon.groupBy($"comp").agg(min($"canonical").as("rep"))
-    withCanon.select($"node", $"comp").distinct()
-      .join(repOfComp, Seq("comp"))
-      .select($"node".as("norm"), $"rep".as("canonical"))
-      .as[CanonicalLink]
-  }
-
-  /** Collect the (small, broadcast-scale) link map and broadcast it for
-    * flatMap-side canonicalization (Extract.canonicalTriples).
+  /** Collect the dictionary once and broadcast its link map for
+    * flatMap-side canonicalization (Extract.triples).
     */
   def broadcastLinkMap(spark: SparkSession,
                        dict: Dataset[DictEntry]): org.apache.spark.broadcast.Broadcast[Map[String, String]] =
-    spark.sparkContext.broadcast(
-      linkMap(dict).collect().map(l => l.norm -> l.canonical).toMap)
+    spark.sparkContext.broadcast(links(dict.collect().toSeq))
 }

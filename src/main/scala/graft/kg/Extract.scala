@@ -219,10 +219,13 @@ object Extract {
     dedup(triples(ds, fnAliases, canon).toDF(), Seq("fileSha")).as[Triple]
   }
 
+  /** The function-alias set of collected dict rows (drives call
+    * detection, SPEC.md §2).
+    */
+  def fnAliases(rows: Seq[DictEntry]): Set[String] =
+    rows.iterator.filter(_.kind == "function").map(_.norm).toSet
+
   /** Broadcast the function-alias set (SURVEY S3). */
-  def broadcastFnAliases(spark: SparkSession, dict: Dataset[DictEntry]): Broadcast[Set[String]] = {
-    import spark.implicits._
-    val set = dict.filter(_.kind == "function").map(_.norm).collect().toSet
-    spark.sparkContext.broadcast(set)
-  }
+  def broadcastFnAliases(spark: SparkSession, dict: Dataset[DictEntry]): Broadcast[Set[String]] =
+    spark.sparkContext.broadcast(fnAliases(dict.collect().toSeq))
 }

@@ -19,11 +19,8 @@ object KgCatalog {
     val d = dict.getOrElse(KgPipeline.dictDataset(spark).toDF())
     d.createOrReplaceTempView("dict")
 
-    val hashed = TableIO.withInvariants(corpus, 16)
-      .select("repo", "path", "commit", "lang", "content", "file_sha")
-      .as[HashedFile]
     val fnAliases = Extract.broadcastFnAliases(spark, d.as[DictEntry])
-    Extract.mentions(hashed, fnAliases).toDF().createOrReplaceTempView("mentions")
+    Extract.mentions(TableIO.hashedFiles(corpus), fnAliases).toDF().createOrReplaceTempView("mentions")
 
     triplesDir.foreach(dir =>
       spark.read.parquet(dir).createOrReplaceTempView("triples"))

@@ -1,14 +1,16 @@
 package graft.kg
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Full KG-construction DAG (BASELINE.json:6; SURVEY §3.2):
   *
   *   corpus → sha256 invariant → [resume: skip committed buckets]
-  *     → fused mention-scan + pair-gen + classify (narrow, broadcast dict)
-  *     → canonicalize (LSH + connected components → broadcast link map,
-  *       applied inside the same flatMap; per-file max score)
+  *     → one dict collect → function-alias set + link map, built on the
+  *       driver (exact deletion-neighbourhood union-find) and broadcast
+  *     → fused mention-scan + pair-gen + classify + canonicalize (one
+  *       narrow flatMap; per-file max score)
   *     → salted repartition + keep-max triple dedup → partitioned write
   *     → per-bucket lineage manifest
   *
@@ -16,8 +18,9 @@ import org.apache.spark.sql.functions._
   * salted (bucket, pred, salt) repartition. It serves both the global
   * triple dedup and the partitioned write: bucket and salt are functions
   * of fileSha, so every copy of a 7-tuple lands in one task, and the
-  * dedup's sort already orders rows the way the writer needs. Besides
-  * it, only the tiny dictionary-side CC loop shuffles. The 100KB
+  * dedup's sort already orders rows the way the writer needs. The
+  * dictionary side is one collect job; its link map needs O(|dict|)
+  * driver memory, the order of the broadcast it feeds. The 100KB
   * `content` column never crosses a shuffle — it dies inside the narrow
   * flatMap (SURVEY §7.4(4)).
   */
@@ -37,6 +40,16 @@ object KgPipeline {
     import spark.implicits._
     graft.fixtures.Vocab.dictRows
       .map { case (n, id, c, k) => DictEntry(n, id, c, k) }.toDS()
+  }
+
+  /** One dict collect feeds both broadcasts: the function-alias set and
+    * the link map (`Canonicalize.links`, built on the driver).
+    */
+  def broadcastDictionary(spark: SparkSession, dict: Dataset[DictEntry])
+      : (Broadcast[Set[String]], Broadcast[Map[String, String]]) = {
+    val rows = dict.collect().toSeq
+    (spark.sparkContext.broadcast(Extract.fnAliases(rows)),
+      spark.sparkContext.broadcast(Canonicalize.links(rows)))
   }
 
   /** Run (or resume) the pipeline. `onlyBuckets` restricts processing to a
@@ -64,8 +77,7 @@ object KgPipeline {
 
     // stages 1–4 fused per file: mention scan + pair-gen + classify +
     // broadcast-map canonicalization in ONE narrow flatMap
-    val fnAliases = Extract.broadcastFnAliases(spark, dict)
-    val canonB = Canonicalize.broadcastLinkMap(spark, dict)
+    val (fnAliases, canonB) = broadcastDictionary(spark, dict)
     val triples = Extract.triples(todo, fnAliases, canonB).toDF()
       .withColumn("bucket", TableIO.bucketOf(col("fileSha"), cfg.nBuckets))
       .withColumn("salt", pmod(xxhash64(col("fileSha")), lit(WriteSalt)))

@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -36,6 +36,14 @@ object TableIO {
         length(col("content")) <= MaxContentChars)
       .withColumn("file_sha", sha2(col("content"), 256))
       .withColumn("bucket", bucketOf(col("file_sha"), nBuckets))
+
+  /** The corpus as extraction reads it: the guards and sha256 of
+    * `withInvariants`, projected to HashedFile (bucket dropped). Every
+    * caller that scans a whole corpus goes through here.
+    */
+  def hashedFiles(corpus: DataFrame): Dataset[HashedFile] =
+    withInvariants(corpus, 1).select("repo", "path", "commit", "lang", "content", "file_sha")
+      .as(Encoders.product[HashedFile])
 
   /** The routing rule: a file's bucket is a pure function of its sha256,
     * so the corpus row and every triple it yields land in the same bucket.

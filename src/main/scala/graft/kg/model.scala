@@ -86,14 +86,6 @@ case class DictEntry(
     canonical: String,
     kind: String)
 
-/** Similarity-graph edge between two dictionary norms (SURVEY T6 input). */
-case class AliasEdge(src: String, dst: String)
-
-/** Connected-component result: every norm mapped to the canonical
-  * representative of its alias cluster (SURVEY T6 output).
-  */
-case class CanonicalLink(norm: String, canonical: String)
-
 /** OUTPUT — graph materialization (BASELINE.json:6,14): (subj, pred, obj)
   * triples, written partitioned by pred.
   */

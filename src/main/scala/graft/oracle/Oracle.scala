@@ -54,8 +54,9 @@ object Oracle {
     for (i <- norms.indices; j <- (i + 1) until norms.length
          if math.abs(norms(i).length - norms(j).length) <= 1
          if levenshtein(norms(i), norms(j)) <= 1) union(i, j)
-    // representative canonical = lexicographically smallest canonical in cluster
-    val canonOfNorm = dict.map(t => t._1 -> t._3).toMap
+    // representative canonical = lexicographically smallest canonical in
+    // cluster; a norm listed under several entities carries all of theirs
+    val canonOfNorm = dict.groupBy(_._1).map { case (n, rs) => n -> rs.map(_._3).min }
     val repCanon = norms.indices.groupBy(find).map { case (root, members) =>
       root -> members.map(m => canonOfNorm(norms(m))).min
     }

@@ -12,12 +12,8 @@ import Tables.{corpus, t}
   */
 object KgQueries {
 
-  private def hashedCorpus(s: org.apache.spark.sql.SparkSession, d: String) = {
-    import s.implicits._
-    TableIO.withInvariants(corpus(s, d), 1)
-      .select("repo", "path", "commit", "lang", "content", "file_sha")
-      .as[HashedFile]
-  }
+  private def hashedCorpus(s: org.apache.spark.sql.SparkSession, d: String) =
+    TableIO.hashedFiles(corpus(s, d))
 
   /** Sanitize a document word into a guaranteed-identifier token:
     * lower-case, strip everything outside [a-z0-9_], prefix "w_" (so it
@@ -360,9 +356,11 @@ object KgQueries {
     "join_lsh_block" -> Q.noOracle((s, d) =>
       Canonicalize.lshEdges(KgPipeline.dictDataset(s))),
 
-    // T6: connected components over the alias similarity graph. The edge
-    // set is MinHash-LSH-derived (not SQL-expressible), so this key stays
-    // no-oracle — the ALGORITHM is oracled by cc_components below.
+    // T6: connected components over the alias similarity graph: the
+    // exact deletion-neighbourhood edges the shipped link map is built
+    // from (Canonicalize.aliasEdges). Not SQL-expressible, so this key
+    // stays no-oracle — the ALGORITHM is oracled by cc_components below,
+    // and CanonicalizeSpec checks the link map against Oracle.canonicalMap.
     "cc_unionfind" -> Q.noOracle((s, d) =>
       Canonicalize.connectedComponents(
         Canonicalize.aliasEdges(KgPipeline.dictDataset(s)))),

@@ -23,10 +23,8 @@ object IncrementalIngest {
 
   def run(spark: SparkSession, corpusDir: String, outDir: String,
           checkpointDir: String): Unit = {
-    import spark.implicits._
     val dict = KgPipeline.dictDataset(spark)
-    val fnAliases = Extract.broadcastFnAliases(spark, dict)
-    val canonB = Canonicalize.broadcastLinkMap(spark, dict)
+    val (fnAliases, canonB) = KgPipeline.broadcastDictionary(spark, dict)
 
     val stream = spark.readStream
       .schema(TableIO.corpusSchema)
@@ -37,10 +35,7 @@ object IncrementalIngest {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val hashed = TableIO.withInvariants(batch, 1)
-          .select("repo", "path", "commit", "lang", "content", "file_sha")
-          .as[HashedFile]
-        Extract.canonicalTriples(hashed, fnAliases, canonB)
+        Extract.canonicalTriples(TableIO.hashedFiles(batch), fnAliases, canonB)
           .write.mode("overwrite")
           .parquet(s"$outDir/batch=$batchId")
       }

@@ -7,7 +7,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import graft.{Bench, SparkEntry}
@@ -77,13 +77,6 @@ object Probe {
     } finally sc.removeSparkListener(m)
   }
 
-  /** The corpus as the pipeline reads it: guards and sha256 through
-    * `TableIO.withInvariants`, so every probe measures the shipped path.
-    */
-  private def hashedFiles(corpus: DataFrame): Dataset[HashedFile] =
-    TableIO.withInvariants(corpus, 1).select("repo", "path", "commit", "lang", "content",
-      "file_sha").as(Encoders.product[HashedFile])
-
   /** Per-key wall time with Bench part 1's method: `fn(...).count()`,
     * min of `reps` reported beside every sample.
     */
@@ -150,7 +143,7 @@ object Probe {
     }
     val dict = KgPipeline.dictDataset(spark)
     val triples = Extract.canonicalTriples(
-      hashedFiles(graft.fixtures.CorpusGen.corpus(200).toDF()),
+      TableIO.hashedFiles(graft.fixtures.CorpusGen.corpus(200).toDF()),
       Extract.broadcastFnAliases(spark, dict), Canonicalize.broadcastLinkMap(spark, dict))
     dump("KG pipeline: corpus → canonical triples",
       "One narrow MapPartitions (scan+pair+classify+canonicalize fused; " +
@@ -181,7 +174,7 @@ object Probe {
     val dict = KgPipeline.dictDataset(s)
     val fnAliases = Extract.broadcastFnAliases(s, dict)
     val canonB = Canonicalize.broadcastLinkMap(s, dict)
-    def hashed = hashedFiles(s.read.parquet(corpusDir))
+    def hashed = TableIO.hashedFiles(s.read.parquet(corpusDir))
     val jobs: Seq[(String, () => Any)] = Seq(
       "full_dag" -> (() => Extract.canonicalTriples(hashed, fnAliases, canonB).count()),
       "extract_only" -> (() => Extract.scoredRelations(hashed, fnAliases).count()),

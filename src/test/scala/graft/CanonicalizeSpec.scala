@@ -1,8 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.kg.{Canonicalize, KgPipeline}
+import graft.kg.{Canonicalize, DictEntry, KgPipeline}
 import graft.oracle.Oracle
+import graft.tools.Probe
 import graft.fixtures.Vocab
 
 /** CC + LSH tests (SURVEY §5.2 layer 2: T6/J7 properties). */
@@ -62,19 +63,6 @@ class CanonicalizeSpec extends SparkTestBase {
     assert(got == expected)
   }
 
-  test("localComponents (small-graph fast path) equals distributed CC") {
-    import spark.implicits._
-    val rng = new scala.util.Random(11)
-    val nodes = (0 until 40).map(i => f"m$i%02d")
-    val edges = (0 until 50).map { _ =>
-      (nodes(rng.nextInt(nodes.size)), nodes(rng.nextInt(nodes.size)))
-    }.filter { case (a, b) => a != b }
-    val df = edges.toDF("src", "dst")
-    val dist = Canonicalize.connectedComponents(df).as[(String, String)].collect().toSet
-    val local = Canonicalize.localComponents(df).as[(String, String)].collect().toSet
-    assert(dist == local)
-  }
-
   test("star contraction handles a diameter-300 path in few rounds") {
     import spark.implicits._
     // a 301-node path: label propagation would need ~300 rounds; the
@@ -101,10 +89,8 @@ class CanonicalizeSpec extends SparkTestBase {
   }
 
   test("engine link map equals oracle canonical map") {
-    import spark.implicits._
     val dict = KgPipeline.dictDataset(spark)
-    val got = Canonicalize.linkMap(dict).collect()
-      .map(l => l.norm -> l.canonical).toMap
+    val got = Canonicalize.broadcastLinkMap(spark, dict).value
     val want = Oracle.canonicalMap(Vocab.dictRows)
     assert(got == want)
   }
@@ -112,16 +98,16 @@ class CanonicalizeSpec extends SparkTestBase {
   test("singleton-alias entity maps to its canonical, not its raw norm") {
     import spark.implicits._
     // an entity with ONE alias whose norm differs from the canonical:
-    // no same-entity edge (needs >=2 norms), no LSH edge (no lev<=1
-    // partner) — SPEC.md §4 still requires canon(norm) = entity canonical
+    // no same-entity edge (needs >=2 norms), no levenshtein edge (no
+    // lev<=1 partner) — SPEC.md §4 still requires canon(norm) = entity
+    // canonical
     val rows: Seq[(String, Long, String, String)] = Seq(
       ("solitary", 900L, "solitarylib", "module"),       // singleton, norm != canonical
       ("alphafn", 901L, "alphafn", "function"),           // pair cluster
       ("alphaf", 901L, "alphafn", "function"))
     val dict = rows.map { case (n, id, c, k) =>
       graft.kg.DictEntry(n, id, c, k) }.toDS()
-    val got = Canonicalize.linkMap(dict).collect()
-      .map(l => l.norm -> l.canonical).toMap
+    val got = Canonicalize.broadcastLinkMap(spark, dict).value
     assert(got("solitary") == "solitarylib")
     assert(got("alphafn") == "alphafn" && got("alphaf") == "alphafn")
     // and it matches the independent oracle on the same dict
@@ -130,9 +116,9 @@ class CanonicalizeSpec extends SparkTestBase {
 
   test("distributed CC: two 100k-node components bridged by one edge") {
     import spark.implicits._
-    // adversarial shape above the SmallGraphEdges driver-local threshold:
-    // two long paths (worst-case diameter) plus a single bridge — the
-    // contraction must produce exactly one component in O(log^2 n) rounds
+    // adversarial shape: two long paths (worst-case diameter) plus a
+    // single bridge — the contraction must produce exactly one component
+    // in O(log^2 n) rounds
     val n = 100001
     val e1 = spark.range(n - 1)
       .select(format_string("a%06d", $"id").as("src"),
@@ -142,7 +128,7 @@ class CanonicalizeSpec extends SparkTestBase {
         format_string("b%06d", $"id" + 1).as("dst"))
     val bridge = Seq((f"a${n - 1}%06d", "b000000")).toDF("src", "dst")
     val edges = e1.unionAll(e2).unionAll(bridge)
-    assert(edges.count() > Canonicalize.SmallGraphEdges)
+    assert(edges.count() == 2L * (n - 1) + 1)
     val comps = Canonicalize.connectedComponents(edges, maxIters = 25)
     val reps = comps.select($"comp").distinct().as[String].collect()
     assert(reps.toSeq == Seq("a000000"))
@@ -162,11 +148,62 @@ class CanonicalizeSpec extends SparkTestBase {
     assert(Canonicalize.sig(twoPairs.limit(0)) == ((0L, 0L, 0L)))
   }
 
-  test("linkMap releases its cached alias-edge frame") {
-    val dict = KgPipeline.dictDataset(spark)
-    Canonicalize.linkMap(dict).collect()
-    // storageLevel is the cache manager's lookup for this plan
-    assert(Canonicalize.aliasEdges(dict).storageLevel ==
-      org.apache.spark.storage.StorageLevel.NONE)
+  test("broadcastLinkMap runs exactly one Spark job") {
+    import spark.implicits._
+    // a file-backed dict, as KgPipeline gets it: collecting a local
+    // Dataset would run no job at all
+    val dir = java.nio.file.Files.createTempDirectory("graft_dict").toString + "/dict"
+    KgPipeline.dictDataset(spark).write.parquet(dir)
+    val dict = spark.read.parquet(dir).as[DictEntry]
+    val (links, _, m) = Probe.measured(spark)(Canonicalize.broadcastLinkMap(spark, dict))
+    try {
+      assert(m.jobs.get == 1L, "the dictionary collect is the only job")
+      assert(links.value == Oracle.canonicalMap(Vocab.dictRows))
+    } finally links.destroy()
+  }
+
+  test("driver link map equals the oracle on random and adversarial dictionaries") {
+    def check(rows: Seq[(String, Long, String, String)]): Unit = {
+      val entries = rows.map { case (n, id, c, k) => DictEntry(n, id, c, k) }
+      assert(Canonicalize.links(entries) == Oracle.canonicalMap(rows), rows)
+      // every emitted edge is a real alias edge (SPEC.md §4)
+      val entities = rows.groupBy(_._1).map { case (n, rs) => n -> rs.map(_._2).toSet }
+      Canonicalize.aliasEdgePairs(entries).foreach { case (a, b) =>
+        assert(a < b, (a, b))
+        assert((entities(a) & entities(b)).nonEmpty || Oracle.levenshtein(a, b) <= 1, (a, b))
+      }
+    }
+    def fn(n: String, id: Long, c: String) = (n, id, c, "function")
+    // one-character norms all share the position-0 deletion key ""
+    check(Seq(fn("a", 1, "zeta"), fn("b", 2, "yank"), fn("q", 3, "xray"),
+      fn("xy", 4, "walk"), fn("mn", 5, "mn")))
+    check(Seq(fn("", 1, "empty"), fn("k", 2, "kilo"), fn("kk", 3, "kk"), fn("zzz", 4, "zzz")))
+    // transpositions share deletion keys only at different positions:
+    // levenshtein 2, no edge
+    check(Seq(fn("abc", 1, "abc"), fn("acb", 2, "acb"), fn("xy", 3, "xy"), fn("yx", 4, "yx")))
+    // a norm listed under two entities merges them, in either row order
+    check(Seq(fn("dual", 10, "zzz"), fn("dual", 11, "aaa"), fn("mate", 10, "zzz")))
+    check(Seq(fn("dual", 11, "aaa"), fn("dual", 10, "zzz"), fn("mate", 10, "zzz")))
+    // duplicate rows; a single-alias entity whose norm is not its canonical
+    check(Seq(fn("alphafn", 901, "alphafn"), fn("alphafn", 901, "alphafn"),
+      fn("alphaf", 901, "alphafn"), fn("solitary", 900, "solitarylib")))
+    check(Nil)
+
+    // seeded random dictionaries over a 3-letter alphabet: dense
+    // levenshtein-1 neighbourhoods, shared and duplicated norms, and
+    // canonicals unrelated to the norms so the min really chooses
+    val rng = new scala.util.Random(97)
+    def word(maxLen: Int) = Iterator.fill(rng.nextInt(maxLen + 1))("abc"(rng.nextInt(3))).mkString
+    for (_ <- 1 to 300) {
+      val rows = (0 until 1 + rng.nextInt(30)).flatMap { e =>
+        val canon = word(6)
+        Seq.fill(1 + rng.nextInt(4))(fn(word(5), e.toLong, canon))
+      }
+      val withShared = if (rows.nonEmpty && rng.nextInt(3) == 0) {
+        val r = rows(rng.nextInt(rows.size))
+        rows :+ fn(r._1, 1000L, word(6))
+      } else rows
+      check(rng.shuffle(withShared ++ withShared.take(rng.nextInt(3))))
+    }
   }
 }

@@ -36,7 +36,7 @@ class LshSpec extends SparkTestBase {
     assert(n == 999L, s"expected the 999-pair chain, got $n")
     // connectivity preserved: the chain keeps the whole cluster in one
     // component
-    val comps = graft.kg.Canonicalize.localComponents(
+    val comps = graft.kg.Canonicalize.connectedComponents(
       pairs.select(format_string("d%04d", $"a_doc_id").as("src"),
         format_string("d%04d", $"b_doc_id").as("dst")))
     assert(comps.select("comp").distinct().count() == 1L)
