@@ -290,9 +290,7 @@ object Bench {
                    withCalib: Boolean): (Long, Double, Double, Double) = {
     val w0 = System.nanoTime()
     val s = session(cores, smallSplits = true)
-    val dict = KgPipeline.dictDataset(s)
-    val fnAliases = Extract.broadcastFnAliases(s, dict)
-    val canonB = Canonicalize.broadcastLinkMap(s, dict)
+    val (fnAliases, canonB) = KgPipeline.broadcastDictionary(s, KgPipeline.dictDataset(s))
     var triples = 0L
     val t = (1 to 2).map { _ =>
       val t0 = System.nanoTime()

@@ -15,9 +15,8 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val corpus = fixtures.CorpusGen.corpus(fixtures.CorpusGen.TinyFiles).toDF()
-    val dict = kg.KgPipeline.dictDataset(spark)
-    kg.Extract.canonicalTriples(kg.TableIO.hashedFiles(corpus),
-      kg.Extract.broadcastFnAliases(spark, dict), kg.Canonicalize.broadcastLinkMap(spark, dict)).toDF()
+    val (fnAliases, canonB) = kg.KgPipeline.broadcastDictionary(spark, kg.KgPipeline.dictDataset(spark))
+    kg.Extract.canonicalTriples(kg.TableIO.hashedFiles(corpus), fnAliases, canonB).toDF()
   }
 
   private val all: Map[String, Q] =

@@ -67,42 +67,21 @@ object Canonicalize {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
 
-    // ROUND-7 restructure (optimization guide §2.4 — fewer exchanges, no
-    // recomputed subtrees; per-round output SETS are unchanged, so the
-    // fixpoint and the result are bit-identical and CanonicalizeSpec's
-    // union-find/label-prop/partitioning-invariance pins still hold):
-    //  - `raw` is lazily checkpointed ONCE. The caller's edge-build plan
-    //    (LSH blocking, simhash pair-gen, the event-chain window) used to
-    //    run TWICE — once under the contraction seed and once more under
-    //    the final node-set union at the bottom of this function.
-    //  - each star op is ONE exchange (+ a per-partition sort) instead of
-    //    a min-aggregate exchange PLUS a join of the edge set against the
-    //    min table: partitioning by src both orders the group (first(dst)
-    //    in dst order = the min neighbor) and numbers it (row_number()=1
-    //    replaces the old one-row-per-src min table), and a per-row
-    //    2-struct posexplode+filter emits exactly the old output multiset
-    //    inside the same codegen stage — no join, no second shuffle.
-    //  - symmetrization is a 2-struct explode (one pass over the
-    //    checkpoint) instead of a union that scans it twice.
-    //  - NO round-end distinct exchange: duplicate (src,dst) rows are
-    //    ADJACENT in each star's (src, dst) window sort, so a lag test
-    //    dedupes them inline — each star's output is a function of its
-    //    input SET, bounded by |E|+n rows regardless of input
-    //    multiplicity, so the un-distincted frames cannot grow round
-    //    over round. Cross-group duplicates (two sources electing the
-    //    same (v,m)) survive a round but are deduped by the next star's
-    //    lag test; one final distinct before the node join restores set
-    //    semantics for the result. The `sig` fixpoint test therefore
-    //    compares MULTISETS (hence its sum term): one round after the
-    //    set fixpoint the round map reproduces its input multiset
-    //    exactly (output = F(set) and the set is stable), so detection
-    //    fires at most one round later than the old set-based test.
-    // Per round: sym exchange + oriented exchange = 2 exchanges;
-    // `Probe cc` measured the old join form at ~6 AQE stage-jobs per round
-    // on sf0.1 (66 jobs / 211 stages for 11 rounds).
-    // The whole-partition window state is the node's neighbor list —
-    // spillable (UnsafeExternalSorter), unlike a collect_list array, so
-    // a mega-hub degrades to disk instead of OOM.
+    // What the loop relies on:
+    //  - `raw` is checkpointed once, so the caller's edge plan runs once
+    //    (it feeds both the contraction seed and the final node set).
+    //  - each star is one exchange plus a (src, dst) window sort:
+    //    first(dst) is the min neighbor, row_number() = 1 picks one row
+    //    per src, and duplicate (src, dst) rows are adjacent in the sort,
+    //    so a lag test drops them inline (no round-end distinct). A
+    //    star's output is then a function of its input set, bounded by
+    //    |E| + n rows.
+    //  - cross-group duplicates survive a round, so `sig` compares
+    //    multisets; one round after the set fixpoint the round map
+    //    reproduces its input multiset, so detection fires at most one
+    //    round late. One final distinct restores set semantics.
+    //  - the window state is a node's neighbor list, spillable, so a
+    //    mega-hub degrades to disk instead of OOM.
 
     val raw = edges.select($"src", $"dst").localCheckpoint(eager = false)
 
@@ -149,15 +128,10 @@ object Canonicalize {
         .where($"src" =!= $"dst")
     }
 
-    // LAZY localCheckpoint: the sig() aggregation is the action that
-    // materializes each checkpoint, so a convergence round costs ONE
-    // Spark job, not two (eager checkpoint + agg). One large/small
-    // alternation per round — composing several alternations into one
-    // plan before checkpointing is a trap: each star references its
-    // input ~3× (symmetrize + min-table + join), so k stacked stars
-    // duplicate the un-materialized input subtree ~3^k times and the
-    // optimizer/codegen cost explodes (measured: a 2-alternation
-    // "double-step" made the round SLOWER, not faster).
+    // Lazy localCheckpoint: sig() is the action that materializes each
+    // round, so a round costs one Spark job. One large/small alternation
+    // per round: stacking several before a checkpoint re-plans the
+    // un-materialized input once per reference.
     var cur = raw.where($"src" =!= $"dst")
       .distinct().localCheckpoint(eager = false)
     // carry the signature forward: the previous round's sig(next) is
@@ -175,8 +149,7 @@ object Canonicalize {
     }
     require(converged, s"star-contraction CC did not converge in $maxIters rounds")
     // cur is now a forest of stars root←node; roots map to themselves.
-    // Node set from the checkpointed raw projection (NOT the caller's
-    // plan — see the `raw` note above).
+    // Node set from the checkpointed raw projection, not the caller's plan.
     val nodes = raw.select($"src".as("node"))
       .unionAll(raw.select($"dst".as("node"))).distinct()
     // cur may carry cross-group duplicate pairs (no per-round distinct) —

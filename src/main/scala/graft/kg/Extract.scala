@@ -5,18 +5,18 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, row_number}
 
-/** Stages 1–3: mention detection (SURVEY T1), candidate pair generation
-  * (J5/J6), relation classification (T2) — implementing SPEC.md §2–§3.
+/** Extraction, SPEC.md §2–§3: mention detection (SURVEY T1), then one
+  * pass over a file's mentions that pairs each call with its nearest
+  * preceding def (J5/J6), scores it (T2) and emits the relations.
   *
-  * Spark shape: a single narrow `flatMap` per corpus row
-  * (`Dataset[HashedFile] → Dataset[ScoredRelation]`), with the function
-  * dictionary broadcast to executors (BASELINE.json:6
-  * "mapPartitions-backed broadcast dictionaries"). Pair-gen is fused into
-  * the per-file scan — mentions of one file are born colocated, so there
-  * is ZERO shuffle until entity linking (SURVEY §4.4(2)).
+  * Spark shape: a single narrow `mapPartitions` per corpus row, with the
+  * function dictionary broadcast to executors (BASELINE.json:6
+  * "mapPartitions-backed broadcast dictionaries"). The mentions of one
+  * file are born colocated, so relations need no shuffle; the only
+  * exchange is `dedup`'s (SURVEY §4.4(2)).
   *
-  * The per-stage functions (`scanFile`, `pairs`, `classify`) are pure and
-  * unit-testable; the fused `relations` composes them per row.
+  * `scanFile`, `relations` and `fileTriples` are pure and unit-testable;
+  * the Spark functions map them over partitions.
   */
 object Extract {
 
@@ -79,60 +79,66 @@ object Extract {
     out.result()
   }
 
-  /** Stage 2 — SPEC.md §3: candidate pairs within one file.
-    * Emits (class, base) same-line pairs and (def, call) pairs with
-    * def.line < call.line; `nearest` marks the max-line preceding def.
+  /** SPEC.md §3 in one pass over one file's mentions, in line order:
+    * calls `emit(subj, pred, obj, score)` per relation. Only the nearest
+    * preceding def can make a `calls` pair, and a def line is structural
+    * (it holds no calls), so the last def seen is that def; a base
+    * follows its class on the class's own line. A `calls` pair `d`
+    * lines apart scores the logistic 1 / (1 + e^-(4 - 0.1d)) and is kept
+    * at ≥ 0.5. A relation repeats when its mentions do.
     */
-  def pairs(ms: Vector[Mention]): Vector[CandidatePair] = {
-    val out = Vector.newBuilder[CandidatePair]
-    val byLine = ms.groupBy(_.line)
-    for (c <- ms if c.kind == "class";
-         b <- byLine(c.line).filter(_.kind == "base"))
-      out += CandidatePair(c.fileSha, c.repo, c.path, c.commit, c.lang,
-        c.norm, "class", b.norm, "base", 0, nearest = true)
-    val defs = ms.filter(_.kind == "def").sortBy(_.line)
-    for (call <- ms if call.kind == "call") {
-      val preceding = defs.filter(_.line < call.line)
-      val nearestLine = if (preceding.isEmpty) -1 else preceding.map(_.line).max
-      for (d <- preceding)
-        out += CandidatePair(call.fileSha, call.repo, call.path, call.commit,
-          call.lang, d.norm, "def", call.norm, "call",
-          call.line - d.line, nearest = d.line == nearestLine)
+  private def forEachRelation(f: HashedFile, fnAliases: Set[String])
+                             (emit: (String, String, String, Double) => Unit): Unit = {
+    val fileSym = s"${f.repo}:${f.path}"
+    var lastDef: Mention = null
+    var lastClass: Mention = null
+    scanFile(f, fnAliases).foreach { m =>
+      m.kind match {
+        case "import" => emit(fileSym, "imports", m.norm, 1.0)
+        case "def" =>
+          emit(fileSym, "defines_function", m.norm, 1.0)
+          lastDef = m
+        case "class" =>
+          emit(fileSym, "defines_class", m.norm, 1.0)
+          lastClass = m
+        case "base" => emit(lastClass.norm, "extends", m.norm, 1.0)
+        case "call" =>
+          if (lastDef == null) emit(fileSym, "calls", m.norm, 1.0)
+          else {
+            val sc = 1.0 / (1.0 + math.exp(-(4.0 - 0.1 * (m.line - lastDef.line))))
+            if (sc >= 0.5) emit(lastDef.norm, "calls", m.norm, sc)
+          }
+      }
     }
-    out.result()
   }
 
-  /** Stage-3 deterministic calibrated score (SPEC.md §3). */
-  def score(p: CandidatePair): Double =
-    if (p.subjKind == "class") 1.0
-    else 1.0 / (1.0 + math.exp(-(4.0 - 0.1 * p.lineDist)))
-
-  /** Stages 1–3 fused for one file → deduplicated scored relations
-    * (local Set dedup — the triple key includes fileSha, so per-file
-    * dedup is globally complete with NO shuffle, SURVEY §4.4(2)).
+  /** One file's distinct scored relations, in mention order. One
+    * (subj, pred, obj) can carry two scores (the same callee called at
+    * two distances from its def); `fileTriples` keeps the max.
     */
   def relations(f: HashedFile, fnAliases: Set[String]): Vector[ScoredRelation] = {
-    val ms = scanFile(f, fnAliases)
-    val fileSym = s"${f.repo}:${f.path}"
     val seen = scala.collection.mutable.LinkedHashSet[ScoredRelation]()
-    def emit(s: String, p: String, o: String, sc: Double): Unit =
+    forEachRelation(f, fnAliases) { (s, p, o, sc) =>
       seen += ScoredRelation(f.file_sha, f.repo, f.path, f.commit, s, p, o, sc)
-    for (m <- ms) m.kind match {
-      case "import" => emit(fileSym, "imports", m.norm, 1.0)
-      case "def"    => emit(fileSym, "defines_function", m.norm, 1.0)
-      case "class"  => emit(fileSym, "defines_class", m.norm, 1.0)
-      case _        => ()
     }
-    for (p <- pairs(ms)) {
-      val sc = score(p)
-      if (p.subjKind == "class") emit(p.subjNorm, "extends", p.objNorm, sc)
-      else if (p.nearest && sc >= 0.5) emit(p.subjNorm, "calls", p.objNorm, sc)
-    }
-    // calls with no preceding def → file-symbol subject
-    val defs = ms.filter(_.kind == "def")
-    for (c <- ms if c.kind == "call" && !defs.exists(_.line < c.line))
-      emit(fileSym, "calls", c.norm, 1.0)
     seen.toVector
+  }
+
+  /** One file's canonical triples: every norm goes through the link map
+    * `canon`, and score variants of one 7-tuple (the same call edge at
+    * two distances, or two norms of one canonical) collapse to their
+    * max, so the file emits each 7-tuple once.
+    */
+  def fileTriples(f: HashedFile, fnAliases: Set[String],
+                  canon: Map[String, String]): Iterator[Triple] = {
+    val best = scala.collection.mutable.LinkedHashMap.empty[(String, String, String), Double]
+    forEachRelation(f, fnAliases) { (s, p, o, sc) =>
+      best.updateWith((canon.getOrElse(s, s), p, canon.getOrElse(o, o)))(
+        prev => Some(prev.fold(sc)(math.max(_, sc))))
+    }
+    best.iterator.map { case ((s, p, o), sc) =>
+      Triple(s, p, o, f.repo, f.path, f.commit, f.file_sha, sc)
+    }
   }
 
   /** Spark stage 1: corpus → mentions (narrow flatMap, broadcast dict). */
@@ -159,14 +165,12 @@ object Extract {
   /** The 7-tuple that identifies a triple; `score` rides along. */
   private[kg] val TripleKey: Seq[String] = Seq("subj", "pred", "obj", "repo", "path", "commit", "fileSha")
 
-  /** Stages 1–4 fused: corpus → CANONICAL triples in one narrow flatMap.
-    * The norm→canonical link map is broadcast alongside the function
-    * dictionary (BASELINE.json:6 "mapPartitions-backed broadcast
-    * dictionaries"), so canonicalization costs zero extra stages. Score
-    * variants of one 7-tuple within a file (the same call edge at two
-    * distances, or two norms of one canonical) collapse here to their
-    * max, so each file emits every 7-tuple once. Copies across rows —
-    * the same file delivered twice — are left to `dedup`.
+  /** Stages 1–4 fused: corpus → CANONICAL triples in one narrow
+    * `mapPartitions` of `fileTriples`. The norm→canonical link map is
+    * broadcast alongside the function dictionary (BASELINE.json:6
+    * "mapPartitions-backed broadcast dictionaries"), so canonicalization
+    * costs zero extra stages. Copies across rows — the same file
+    * delivered twice — are left to `dedup`.
     */
   def triples(ds: Dataset[HashedFile],
               fnAliases: Broadcast[Set[String]],
@@ -176,16 +180,7 @@ object Extract {
     ds.mapPartitions { it =>
       val dict = fnAliases.value
       val c = canon.value
-      it.flatMap { f =>
-        val best = scala.collection.mutable.LinkedHashMap.empty[(String, String, String), Double]
-        relations(f, dict).foreach { r =>
-          val k = (c.getOrElse(r.subjNorm, r.subjNorm), r.pred, c.getOrElse(r.objNorm, r.objNorm))
-          best.updateWith(k)(prev => Some(prev.fold(r.score)(math.max(_, r.score))))
-        }
-        best.iterator.map { case ((s, p, o), sc) =>
-          Triple(s, p, o, f.repo, f.path, f.commit, f.file_sha, sc)
-        }
-      }
+      it.flatMap(fileTriples(_, dict, c))
     }
   }
 

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   *   corpus → sha256 invariant → [resume: skip committed buckets]
   *     → one dict collect → function-alias set + link map, built on the
   *       driver (exact deletion-neighbourhood union-find) and broadcast
-  *     → fused mention-scan + pair-gen + classify + canonicalize (one
-  *       narrow flatMap; per-file max score)
+  *     → fused mention scan + nearest-def relation pass + canonicalize
+  *       (one narrow flatMap; per-file max score)
   *     → salted repartition + keep-max triple dedup → partitioned write
   *     → per-bucket lineage manifest
   *
@@ -75,7 +75,7 @@ object KgPipeline {
       .select("repo", "path", "commit", "lang", "content", "file_sha")
       .as[HashedFile]
 
-    // stages 1–4 fused per file: mention scan + pair-gen + classify +
+    // stages 1–4 fused per file: mention scan + relation pass +
     // broadcast-map canonicalization in ONE narrow flatMap
     val (fnAliases, canonB) = broadcastDictionary(spark, dict)
     val triples = Extract.triples(todo, fnAliases, canonB).toDF()

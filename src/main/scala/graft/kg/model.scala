@@ -48,25 +48,7 @@ case class Mention(
     start: Int,
     end: Int)
 
-/** Stage-2 output (candidate pair generation, SURVEY J5/J6).
-  * A candidate (subject-mention, object-mention) pair born colocated
-  * per file — pair-gen is fused into the per-file scan, zero shuffle
-  * (SURVEY §4.4(2)).
-  */
-case class CandidatePair(
-    fileSha: String,
-    repo: String,
-    path: String,
-    commit: String,
-    lang: String,
-    subjNorm: String,
-    subjKind: String,
-    objNorm: String,
-    objKind: String,
-    lineDist: Int,
-    nearest: Boolean)
-
-/** Stage-3 output (relation classification, SURVEY T2). */
+/** Extraction output: a scored relation of one file (SURVEY T2). */
 case class ScoredRelation(
     fileSha: String,
     repo: String,

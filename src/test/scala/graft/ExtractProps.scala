@@ -2,7 +2,7 @@ package graft
 
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
-import graft.kg.{Extract, HashedFile}
+import graft.kg.{Canonicalize, DictEntry, Extract, HashedFile}
 import graft.fixtures.Vocab
 import graft.oracle.Oracle
 import graft.functions.Hashing
@@ -18,8 +18,12 @@ object ExtractProps extends Properties("graft") {
   private val moduleAlias = Gen.oneOf(Vocab.modules).flatMap(m => Gen.oneOf(Vocab.aliases(m)))
   private val fnAlias = Gen.oneOf(Vocab.functions).flatMap(f => Gen.oneOf(Vocab.aliases(f)))
   private val cls = Gen.oneOf(Vocab.classes)
+  private val links = Canonicalize.links(Vocab.dictRows.map { case (n, id, c, k) => DictEntry(n, id, c, k) })
 
-  /** A random line in the corpus grammar, plus adversarial noise lines. */
+  /** A random line in the corpus grammar, plus adversarial noise lines
+    * and 35–50-line padding blocks, so call-to-def distances fall on
+    * both sides of the lineDist ≤ 40 keep-gate.
+    */
   private val line: Gen[String] = Gen.frequency(
     3 -> moduleAlias.map(m => s"import $m"),
     1 -> Gen.zip(moduleAlias, fnAlias).map { case (m, f) => s"from $m import $f" },
@@ -30,7 +34,8 @@ object ExtractProps extends Properties("graft") {
     1 -> Gen.const(""),
     1 -> Gen.const("    pass"),
     1 -> word.map(w => s"    $w = $w * 2"),
-    1 -> Gen.asciiPrintableStr.map(s => "    " + s.replace("\n", " ").take(60)))
+    1 -> Gen.asciiPrintableStr.map(s => "    " + s.replace("\n", " ").take(60)),
+    1 -> Gen.choose(35, 50).map(n => Seq.fill(n)("    x = 1").mkString("\n")))
 
   private val pyFile: Gen[HashedFile] =
     Gen.nonEmptyListOf(line).map { lines =>
@@ -54,6 +59,18 @@ object ExtractProps extends Properties("graft") {
       Prop(e == o) :| s"engine=$e oracle=$o"
     }
 
+  property("engine triples == oracle scored triples on random files") =
+    forAll(pyFile) { f =>
+      val cf = graft.kg.CodeFile(f.repo, f.path, f.commit, f.lang, f.content)
+      val rows = Extract.fileTriples(f, fnAliases, links).toSeq
+      val e = rows.map(t => (t.subj, t.pred, t.obj, t.repo, t.path, t.commit, t.fileSha) -> t.score).toMap
+      val o = Oracle.scoredTriples(Seq(cf), Vocab.dictRows).map { case (t, sc) =>
+        (t.subj, t.pred, t.obj, t.repo, t.path, t.commit, t.fileSha) -> sc
+      }
+      Prop(e.size == rows.size && e == o) :|
+        s"repeated 7-tuples=${rows.size - e.size} spurious=${e.toSet -- o} missed=${o.toSet -- e}"
+    }
+
   property("relations are deterministic and norm-lowercased") =
     forAll(pyFile) { f =>
       val r1 = Extract.relations(f, fnAliases)
@@ -62,8 +79,8 @@ object ExtractProps extends Properties("graft") {
     }
 
   // (subj,pred,obj) keys MAY repeat with different scores pre-dedup —
-  // two calls to the same callee at different distances; the pipeline's
-  // max(score) aggregation resolves them. Full tuples must be unique.
+  // two calls to the same callee at different distances; `fileTriples`
+  // keeps the max. Full tuples must be unique.
   property("relations dedup: full tuples unique per file") =
     forAll(pyFile) { f =>
       val rels = Extract.relations(f, fnAliases)
