@@ -22,7 +22,7 @@ object Main {
     val out = opts.getOrElse("--out",
       sys.error("required: --out <dir> (plus --corpus <dir> or --nfiles N)"))
     val runId = opts.getOrElse("--run-id", "run-1")
-    val nBuckets = opts.getOrElse("--buckets", "16").toInt
+    val nBuckets = opts.get("--buckets").fold(TableIO.DefaultBuckets)(_.toInt)
 
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"))

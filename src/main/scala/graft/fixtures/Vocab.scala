@@ -60,14 +60,4 @@ object Vocab {
   /** Normalized function-alias set (drives call detection, SPEC.md §2). */
   val functionAliasNorms: Set[String] =
     functions.flatMap(aliases).toSet
-
-  /** norm → canonical, via the alias-cluster rule. Because the vocabulary
-    * guarantees no cross-entity levenshtein≤1 pair, the cluster of a norm
-    * is exactly its entity and the representative is its canonical.
-    * (The engine recomputes this with a deletion-neighbourhood union-find;
-    * the oracle with exhaustive union-find; VocabSpec asserts the
-    * guarantee.)
-    */
-  val canonicalOf: Map[String, String] =
-    dictRows.map { case (n, _, c, _) => n -> c }.toMap
 }

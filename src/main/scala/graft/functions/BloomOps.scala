@@ -23,13 +23,6 @@ object BloomOps {
         GraftColumnBridge.expression(xxhash64(key)), estimatedItems)
         .toAggregateExpression())
 
-  /** Membership probe against a bloom binary (built by bloomAgg). */
-  def mightContain(bloom: Column, key: Column): Column =
-    GraftColumnBridge.column(
-      BloomFilterMightContain(
-        GraftColumnBridge.expression(bloom),
-        GraftColumnBridge.expression(xxhash64(key))))
-
   /** Membership probe whose bloom is built by a SCALAR SUBQUERY over the
     * build side — the exact shape Spark's own InjectRuntimeFilter plants.
     * Unlike collecting the bloom to the driver and embedding it as a

@@ -3,7 +3,7 @@ package graft.kg
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{col, row_number}
+import org.apache.spark.sql.functions.{col, lit, pmod, row_number, xxhash64}
 
 /** Extraction, SPEC.md §2–§3: mention detection (SURVEY T1), then one
   * pass over a file's mentions that pairs each call with its nearest
@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions.{col, row_number}
   * file are born colocated, so relations need no shuffle; the only
   * exchange is `dedup`'s (SURVEY §4.4(2)).
   *
-  * `scanFile`, `relations` and `fileTriples` are pure and unit-testable;
-  * the Spark functions map them over partitions.
+  * `scanFile` and `fileTriples` are pure and unit-testable; the Spark
+  * functions map them over partitions.
   */
 object Extract {
 
@@ -85,7 +85,8 @@ object Extract {
     * (it holds no calls), so the last def seen is that def; a base
     * follows its class on the class's own line. A `calls` pair `d`
     * lines apart scores the logistic 1 / (1 + e^-(4 - 0.1d)) and is kept
-    * at ≥ 0.5. A relation repeats when its mentions do.
+    * at ≥ 0.5. A relation repeats when its mentions do; `fileTriples`
+    * keeps one per 7-tuple.
     */
   private def forEachRelation(f: HashedFile, fnAliases: Set[String])
                              (emit: (String, String, String, Double) => Unit): Unit = {
@@ -110,18 +111,6 @@ object Extract {
           }
       }
     }
-  }
-
-  /** One file's distinct scored relations, in mention order. One
-    * (subj, pred, obj) can carry two scores (the same callee called at
-    * two distances from its def); `fileTriples` keeps the max.
-    */
-  def relations(f: HashedFile, fnAliases: Set[String]): Vector[ScoredRelation] = {
-    val seen = scala.collection.mutable.LinkedHashSet[ScoredRelation]()
-    forEachRelation(f, fnAliases) { (s, p, o, sc) =>
-      seen += ScoredRelation(f.file_sha, f.repo, f.path, f.commit, s, p, o, sc)
-    }
-    seen.toVector
   }
 
   /** One file's canonical triples: every norm goes through the link map
@@ -151,16 +140,12 @@ object Extract {
     }
   }
 
-  /** Spark stages 1–3 fused: corpus → scored relations (narrow). */
+  /** Spark stages 1–3 fused: the shipped `fileTriples` flatMap with
+    * identity canonicalization (an empty link map).
+    */
   def scoredRelations(ds: Dataset[HashedFile],
-                      fnAliases: Broadcast[Set[String]]): Dataset[ScoredRelation] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.mapPartitions { it =>
-      val dict = fnAliases.value
-      it.flatMap(relations(_, dict))
-    }
-  }
+                      fnAliases: Broadcast[Set[String]]): Dataset[Triple] =
+    triples(ds, fnAliases, ds.sparkSession.sparkContext.broadcast(Map.empty[String, String]))
 
   /** The 7-tuple that identifies a triple; `score` rides along. */
   private[kg] val TripleKey: Seq[String] = Seq("subj", "pred", "obj", "repo", "path", "commit", "fileSha")
@@ -184,34 +169,44 @@ object Extract {
     }
   }
 
-  /** The one triple dedup: keep the max-score row per 7-tuple. The rows
-    * are hash-repartitioned on `clusterBy`, then `row_number()` over
-    * (`clusterBy` ++ 7-tuple) ordered by score desc keeps rank 1 — one
-    * exchange and one sort, no hash-aggregate map. Precondition: every
-    * `clusterBy` column is a function of (fileSha, pred), so all copies
-    * of a 7-tuple share a partition. The output is sorted by
-    * (`clusterBy`, 7-tuple) within each partition, so a writer that
-    * partitions by a prefix of `clusterBy` adds no sort of its own.
+  /** Write tasks per (bucket, pred) partition, so a hot pred does not
+    * serialize one task.
     */
-  def dedup(rows: DataFrame, clusterBy: Seq[String]): DataFrame = {
-    val key = (clusterBy ++ TripleKey.filterNot(clusterBy.contains)).map(col)
-    rows.repartition(clusterBy.map(col): _*)
+  private val WriteSalt = 8
+
+  /** The one triple dedup and the triple table's layout key. It adds
+    * `bucket` (`TableIO.bucketOf`) and `salt` (xxhash64(fileSha) mod
+    * `WriteSalt`), hash-repartitions on (bucket, pred, salt), and keeps
+    * the max-score row per 7-tuple with `row_number()` over (bucket,
+    * pred, salt, 7-tuple) by score desc: one exchange and one sort, no
+    * hash-aggregate map. Every key column is a function of (fileSha,
+    * pred), so all copies of a 7-tuple meet in one task. The rows keep
+    * `bucket`, lose `salt`, and come out sorted by (bucket, pred, …)
+    * within each partition, so `TableIO.writeTriples` adds no sort.
+    */
+  def dedup(triples: Dataset[Triple], nBuckets: Int): DataFrame = {
+    val layout = Seq("bucket", "pred", "salt")
+    val key = (layout ++ TripleKey.filterNot(layout.contains)).map(col)
+    triples.toDF()
+      .withColumn("bucket", TableIO.bucketOf(col("fileSha"), nBuckets))
+      .withColumn("salt", pmod(xxhash64(col("fileSha")), lit(WriteSalt)))
+      .repartition(layout.map(col): _*)
       .withColumn("rank", row_number().over(Window.partitionBy(key: _*).orderBy(col("score").desc)))
       .filter(col("rank") === 1)
-      .drop("rank")
+      .drop("rank", "salt")
   }
 
   /** Canonical triples, each 7-tuple once with its max score: `triples`
-    * then `dedup` clustered on fileSha. This is the one canonicalization
-    * path: SparkEntry.entry, the oracled `kg_triples_counts` key and the
-    * streaming sink run it, and KgPipeline runs the same two functions
-    * with its write columns as the cluster key.
+    * then `dedup` at the default bucket count, `bucket` dropped. This is
+    * the one canonicalization path: SparkEntry.entry, the oracled
+    * `kg_triples_counts` key and the streaming sink run the exchange
+    * KgPipeline writes through.
     */
   def canonicalTriples(ds: Dataset[HashedFile],
                        fnAliases: Broadcast[Set[String]],
                        canon: Broadcast[Map[String, String]]): Dataset[Triple] = {
     import ds.sparkSession.implicits._
-    dedup(triples(ds, fnAliases, canon).toDF(), Seq("fileSha")).as[Triple]
+    dedup(triples(ds, fnAliases, canon), TableIO.DefaultBuckets).drop("bucket").as[Triple]
   }
 
   /** The function-alias set of collected dict rows (drives call

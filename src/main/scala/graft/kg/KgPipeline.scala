@@ -14,11 +14,12 @@ import org.apache.spark.sql.functions._
   *     → salted repartition + keep-max triple dedup → partitioned write
   *     → per-bucket lineage manifest
   *
-  * Scale posture: the corpus-proportional data crosses ONE exchange, the
-  * salted (bucket, pred, salt) repartition. It serves both the global
-  * triple dedup and the partitioned write: bucket and salt are functions
-  * of fileSha, so every copy of a 7-tuple lands in one task, and the
-  * dedup's sort already orders rows the way the writer needs. The
+  * Scale posture: the corpus-proportional data crosses ONE exchange,
+  * `Extract.dedup`'s salted (bucket, pred, salt) repartition. It serves
+  * both the global triple dedup and the partitioned write: bucket and
+  * salt are functions of fileSha, so every copy of a 7-tuple lands in
+  * one task, and the dedup's sort already orders rows the way the writer
+  * needs. `Extract.canonicalTriples` runs the same exchange. The
   * dictionary side is one collect job; its link map needs O(|dict|)
   * driver memory, the order of the broadcast it feeds. The 100KB
   * `content` column never crosses a shuffle — it dies inside the narrow
@@ -28,13 +29,11 @@ final case class KgConfig(
     triplesDir: String,
     manifestDir: String,
     runId: String,
-    nBuckets: Int = 16)
+    nBuckets: Int = TableIO.DefaultBuckets)
 
 final case class KgResult(triplesWritten: Long, bucketsCommitted: Int, wallMs: Long)
 
 object KgPipeline {
-
-  private val WriteSalt = 8 // write tasks per (bucket, pred) partition
 
   def dictDataset(spark: SparkSession): Dataset[DictEntry] = {
     import spark.implicits._
@@ -75,18 +74,13 @@ object KgPipeline {
       .select("repo", "path", "commit", "lang", "content", "file_sha")
       .as[HashedFile]
 
-    // stages 1–4 fused per file: mention scan + relation pass +
-    // broadcast-map canonicalization in ONE narrow flatMap
+    // stages 1–4 fused per file (mention scan + relation pass +
+    // broadcast-map canonicalization in ONE narrow flatMap), then the one
+    // exchange (SURVEY §4.4(4)): the dedup's salted (bucket, pred, salt)
+    // repartition, whose sort order the partitioned write reuses
     val (fnAliases, canonB) = broadcastDictionary(spark, dict)
-    val triples = Extract.triples(todo, fnAliases, canonB).toDF()
-      .withColumn("bucket", TableIO.bucketOf(col("fileSha"), cfg.nBuckets))
-      .withColumn("salt", pmod(xxhash64(col("fileSha")), lit(WriteSalt)))
-
-    // the one exchange (SURVEY §4.4(4)): repartition on the partition
-    // columns + salt so hot preds don't serialize one task; the dedup
-    // runs inside it, and its sort order starts with (bucket, pred)
-    val out = Extract.dedup(triples, Seq("bucket", "pred", "salt")).drop("salt")
-    TableIO.writeTriples(out, cfg.triplesDir)
+    TableIO.writeTriples(Extract.dedup(Extract.triples(todo, fnAliases, canonB), cfg.nBuckets),
+      cfg.triplesDir)
 
     // lineage from what actually landed on disk (SURVEY A7/S5), read
     // back once; todo buckets that got no triples commit as (0, 0)

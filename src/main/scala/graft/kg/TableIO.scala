@@ -45,6 +45,11 @@ object TableIO {
     withInvariants(corpus, 1).select("repo", "path", "commit", "lang", "content", "file_sha")
       .as(Encoders.product[HashedFile])
 
+  /** Bucket count of the triple table unless a run chooses another
+    * (`KgConfig.nBuckets`); `Extract.canonicalTriples` routes with it.
+    */
+  val DefaultBuckets: Int = 16
+
   /** The routing rule: a file's bucket is a pure function of its sha256,
     * so the corpus row and every triple it yields land in the same bucket.
     */

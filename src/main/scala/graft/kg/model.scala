@@ -1,7 +1,5 @@
 package graft.kg
 
-import java.sql.Timestamp
-
 /** Core typed data model for the KG-construction engine.
   *
   * Shapes mandated by BASELINE.json:15 (input) and BASELINE.json:6
@@ -48,17 +46,6 @@ case class Mention(
     start: Int,
     end: Int)
 
-/** Extraction output: a scored relation of one file (SURVEY T2). */
-case class ScoredRelation(
-    fileSha: String,
-    repo: String,
-    path: String,
-    commit: String,
-    subjNorm: String,
-    pred: String,
-    objNorm: String,
-    score: Double)
-
 /** Entity-dictionary row (broadcast lexicon, SURVEY S3).
   * One row per normalized alias; entityId is stable per canonical.
   */
@@ -80,20 +67,3 @@ case class Triple(
     commit: String,
     fileSha: String,
     score: Double)
-
-/** Per-partition lineage manifest row (BASELINE.json:6 "per-partition
-  * lineage and checkpointed resumability"). contentDigest is a
-  * commutative xor-fold of xxhash64(file_sha) — invariant under
-  * partitioning and row order, so N-core and 4N-core runs are directly
-  * comparable.
-  */
-case class PartitionManifest(
-    runId: String,
-    stage: String,
-    bucket: Int,
-    rowCount: Long,
-    contentDigest: Long,
-    status: String,
-    attempt: Int,
-    startedAt: Timestamp,
-    wallMs: Long)

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types._
 import graft.kg._
 
 /** Structured Streaming stretch (SURVEY §2.9 — post-parity optional):
@@ -20,6 +21,15 @@ import graft.kg._
   * analogue of the manifest's bucket resume.
   */
 object IncrementalIngest {
+
+  /** The events table as the streaming event jobs read it. */
+  private val eventsSchema = StructType(Seq(
+    StructField("event_id", LongType),
+    StructField("ts", TimestampType),
+    StructField("user_id", LongType),
+    StructField("event_type", StringType),
+    StructField("value", DoubleType),
+    StructField("props", StringType)))
 
   def run(spark: SparkSession, corpusDir: String, outDir: String,
           checkpointDir: String): Unit = {
@@ -57,9 +67,7 @@ object IncrementalIngest {
                           checkpointDir: String): Unit = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))
+    val schema = StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType)))
     val q = spark.readStream.schema(schema).parquet(docsDir)
       .select(sha2(col("text"), 256).as("sha"), col("doc_id"))
       .as[(String, Long)]
@@ -98,14 +106,7 @@ object IncrementalIngest {
     */
   def sessionWindows(spark: SparkSession, eventsDir: String, outDir: String,
                      checkpointDir: String, gap: String = "30 minutes"): Unit = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("props", org.apache.spark.sql.types.StringType)))
-    val q = spark.readStream.schema(schema).parquet(eventsDir)
+    val q = spark.readStream.schema(eventsSchema).parquet(eventsDir)
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"), session_window(col("ts"), gap))
       .agg(count(lit(1)).as("n_events"),
@@ -131,14 +132,7 @@ object IncrementalIngest {
     */
   def windowedEventCounts(spark: SparkSession, eventsDir: String,
                           outDir: String, checkpointDir: String): Unit = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("props", org.apache.spark.sql.types.StringType)))
-    val q = spark.readStream.schema(schema).parquet(eventsDir)
+    val q = spark.readStream.schema(eventsSchema).parquet(eventsDir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))

@@ -73,18 +73,9 @@ object ExtractProps extends Properties("graft") {
 
   property("relations are deterministic and norm-lowercased") =
     forAll(pyFile) { f =>
-      val r1 = Extract.relations(f, fnAliases)
-      val r2 = Extract.relations(f, fnAliases)
-      r1 == r2 && r1.forall(r => r.objNorm == r.objNorm.toLowerCase)
-    }
-
-  // (subj,pred,obj) keys MAY repeat with different scores pre-dedup —
-  // two calls to the same callee at different distances; `fileTriples`
-  // keeps the max. Full tuples must be unique.
-  property("relations dedup: full tuples unique per file") =
-    forAll(pyFile) { f =>
-      val rels = Extract.relations(f, fnAliases)
-      rels.distinct.size == rels.size
+      val r1 = Extract.fileTriples(f, fnAliases, Map.empty).toVector
+      val r2 = Extract.fileTriples(f, fnAliases, Map.empty).toVector
+      r1 == r2 && r1.forall(t => t.obj == t.obj.toLowerCase)
     }
 
   property("xor digest is permutation-invariant") =

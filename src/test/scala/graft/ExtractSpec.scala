@@ -56,8 +56,8 @@ class ExtractSpec extends AnyFunSuite {
     assert(ms.map(m => (m.kind, m.surface)) == Vector(
       ("import", "zululib"), ("class", "DeltaCls"), ("base", "EchoCls"),
       ("def", "mikefn"), ("call", "novemberfn")))
-    val rels = Extract.relations(f, fnAliases)
-      .map(r => (r.subjNorm, r.pred, r.objNorm)).toSet
+    val rels = Extract.fileTriples(f, fnAliases, Map.empty)
+      .map(t => (t.subj, t.pred, t.obj)).toSet
     assert(rels == Set(
       ("r:p.scala", "imports", "zululib"),
       ("r:p.scala", "defines_class", "deltacls"),
@@ -76,8 +76,8 @@ class ExtractSpec extends AnyFunSuite {
          |    r = deltafn(a, b)
          |""".stripMargin
     val f = hashed("r", "p.py", "python", content)
-    val rels = Extract.relations(f, fnAliases)
-      .filter(_.pred == "calls").map(r => (r.subjNorm, r.objNorm))
+    val rels = Extract.fileTriples(f, fnAliases, Map.empty)
+      .filter(_.pred == "calls").map(t => (t.subj, t.obj)).toVector
     // bravofn: nearest def alphafn at distance 1 → kept
     // deltafn: nearest def charliefn at distance 46 → score < 0.5 → dropped
     assert(rels == Vector(("alphafn", "bravofn")))
@@ -86,7 +86,7 @@ class ExtractSpec extends AnyFunSuite {
   test("call with no preceding def gets file-symbol subject") {
     val content = "setup = alphafn(1, 2)\n"
     val f = hashed("r", "p.py", "python", content)
-    val rels = Extract.relations(f, fnAliases).map(r => (r.subjNorm, r.pred, r.objNorm))
+    val rels = Extract.fileTriples(f, fnAliases, Map.empty).map(t => (t.subj, t.pred, t.obj)).toVector
     assert(rels == Vector(("r:p.py", "calls", "alphafn")))
   }
 

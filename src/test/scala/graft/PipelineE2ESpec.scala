@@ -89,15 +89,22 @@ class PipelineE2ESpec extends SparkTestBase {
     val fnAliases = Extract.broadcastFnAliases(spark, dict)
     val canonB = Canonicalize.broadcastLinkMap(spark, dict)
 
-    // the fixture really has score variants of one edge within a file
-    val edgeRels = Extract.relations(
+    // the fixture really has score variants of one edge within a file:
+    // each canonical callee is called at two distances from alphafn ...
+    val ms = Oracle.mentions(edgeFile, fnAliases.value)
+    val defLine = ms.find(_.kind == "def").get.line
+    val distances = ms.filter(_.kind == "call").groupBy { m =>
+      val n = Oracle.norm(m.surface); canonB.value.getOrElse(n, n)
+    }.map { case (callee, calls) => callee -> calls.map(_.line - defLine).sorted }
+    assert(distances == Map("bravofn" -> Vector(1, 4), "charliefn" -> Vector(5, 6)),
+      s"fixture lost the two-distance alphafn edges: $distances")
+    // ... and the file's triples keep the nearer call's score
+    def logistic(d: Int) = 1.0 / (1.0 + math.exp(-(4.0 - 0.1 * d)))
+    val edgeScores = Extract.fileTriples(
       HashedFile(edgeFile.repo, edgeFile.path, edgeFile.commit, edgeFile.lang,
-        edgeFile.content, Oracle.sha256Hex(edgeFile.content)), fnAliases.value)
-      .map(r => (canonB.value.getOrElse(r.subjNorm, r.subjNorm), r.pred,
-        canonB.value.getOrElse(r.objNorm, r.objNorm), r.score))
-    for (callee <- Seq("bravofn", "charliefn"))
-      assert(edgeRels.filter(r => r._1 == "alphafn" && r._3 == callee).map(_._4).distinct.size == 2,
-        s"fixture lost the two-distance alphafn -> $callee edge: $edgeRels")
+        edgeFile.content, Oracle.sha256Hex(edgeFile.content)), fnAliases.value, canonB.value)
+      .collect { case t if t.subj == "alphafn" && t.pred == "calls" => t.obj -> t.score }.toMap
+    assert(edgeScores == Map("bravofn" -> logistic(1), "charliefn" -> logistic(5)), s"$edgeScores")
 
     def keyed(rows: Seq[Triple]): Map[Seq[String], Double] = {
       val m = rows.map(t => Seq(t.subj, t.pred, t.obj, t.repo, t.path, t.commit, t.fileSha) -> t.score).toMap

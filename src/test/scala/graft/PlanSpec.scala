@@ -41,6 +41,24 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
+  test("canonicalTriples runs the pipeline's (bucket, pred, salt) exchange") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import spark.implicits._
+    val (fnAliases, canonB) = graft.kg.KgPipeline.broadcastDictionary(spark,
+      graft.kg.KgPipeline.dictDataset(spark))
+    val triples = graft.kg.Extract.canonicalTriples(
+      graft.kg.TableIO.hashedFiles(graft.fixtures.CorpusGen.corpus(60).toDF()), fnAliases, canonB)
+    val shuffles = allNodes(executed(triples.toDF())).collect { case e: ShuffleExchangeLike => e }
+    assert(shuffles.size == 1, s"not one exchange:\n${executed(triples.toDF()).treeString}")
+    shuffles.head.outputPartitioning match {
+      case h: HashPartitioning =>
+        val keys = h.expressions.map { case a: Attribute => a.name; case e => e.sql }
+        assert(keys == Seq("bucket", "pred", "salt"), s"exchange keys: $keys")
+      case other => fail(s"exchange is not hash-partitioned: $other")
+    }
+  }
+
   test("KG write plan: one exchange, one sort, no hash aggregate") {
     import org.apache.spark.sql.execution.SortExec
     import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec}
