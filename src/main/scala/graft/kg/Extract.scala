@@ -3,7 +3,7 @@ package graft.kg
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{col, lit, pmod, row_number, xxhash64}
+import org.apache.spark.sql.functions.{col, row_number}
 
 /** Extraction, SPEC.md §2–§3: mention detection (SURVEY T1), then one
   * pass over a file's mentions that pairs each call with its nearest
@@ -169,31 +169,26 @@ object Extract {
     }
   }
 
-  /** Write tasks per (bucket, pred) partition, so a hot pred does not
-    * serialize one task.
-    */
-  private val WriteSalt = 8
-
-  /** The one triple dedup and the triple table's layout key. It adds
-    * `bucket` (`TableIO.bucketOf`) and `salt` (xxhash64(fileSha) mod
-    * `WriteSalt`), hash-repartitions on (bucket, pred, salt), and keeps
-    * the max-score row per 7-tuple with `row_number()` over (bucket,
-    * pred, salt, 7-tuple) by score desc: one exchange and one sort, no
-    * hash-aggregate map. Every key column is a function of (fileSha,
-    * pred), so all copies of a 7-tuple meet in one task. The rows keep
-    * `bucket`, lose `salt`, and come out sorted by (bucket, pred, …)
-    * within each partition, so `TableIO.writeTriples` adds no sort.
+  /** The one triple dedup and the triple table's layout key (bucket,
+    * pred). It hash-repartitions on the expressions
+    * (`TableIO.bucketOf(fileSha)`, pred), so only the `Triple` fields
+    * cross the exchange, then adds `bucket` from the same expression
+    * (Spark carries the partitioning through that alias, so the window
+    * adds no second exchange) and keeps the max-score row per 7-tuple
+    * with `row_number()` over (bucket, pred, 7-tuple) by score desc. All
+    * copies of a 7-tuple meet in one task. Rows come out sorted by
+    * (bucket, pred, …), so `TableIO.writeTriples` adds no sort and writes
+    * one file per (bucket, pred) directory.
     */
   def dedup(triples: Dataset[Triple], nBuckets: Int): DataFrame = {
-    val layout = Seq("bucket", "pred", "salt")
-    val key = (layout ++ TripleKey.filterNot(layout.contains)).map(col)
+    val bucket = TableIO.bucketOf(col("fileSha"), nBuckets)
+    val key = ("bucket" +: "pred" +: TripleKey.filterNot(_ == "pred")).map(col)
     triples.toDF()
-      .withColumn("bucket", TableIO.bucketOf(col("fileSha"), nBuckets))
-      .withColumn("salt", pmod(xxhash64(col("fileSha")), lit(WriteSalt)))
-      .repartition(layout.map(col): _*)
+      .repartition(bucket, col("pred"))
+      .withColumn("bucket", bucket)
       .withColumn("rank", row_number().over(Window.partitionBy(key: _*).orderBy(col("score").desc)))
       .filter(col("rank") === 1)
-      .drop("rank", "salt")
+      .drop("rank")
   }
 
   /** Canonical triples, each 7-tuple once with its max score: `triples`

@@ -11,19 +11,21 @@ import org.apache.spark.sql.functions._
   *       driver (exact deletion-neighbourhood union-find) and broadcast
   *     → fused mention scan + nearest-def relation pass + canonicalize
   *       (one narrow flatMap; per-file max score)
-  *     → salted repartition + keep-max triple dedup → partitioned write
+  *     → (bucket, pred) repartition + keep-max triple dedup → partitioned write
   *     → per-bucket lineage manifest
   *
   * Scale posture: the corpus-proportional data crosses ONE exchange,
-  * `Extract.dedup`'s salted (bucket, pred, salt) repartition. It serves
-  * both the global triple dedup and the partitioned write: bucket and
-  * salt are functions of fileSha, so every copy of a 7-tuple lands in
-  * one task, and the dedup's sort already orders rows the way the writer
-  * needs. `Extract.canonicalTriples` runs the same exchange. The
-  * dictionary side is one collect job; its link map needs O(|dict|)
-  * driver memory, the order of the broadcast it feeds. The 100KB
-  * `content` column never crosses a shuffle — it dies inside the narrow
-  * flatMap (SURVEY §7.4(4)).
+  * `Extract.dedup`'s (bucket, pred) repartition, which ships only the
+  * `Triple` fields (bucket is recomputed from fileSha after it). It
+  * serves both the global triple dedup and the partitioned write: bucket
+  * is a function of fileSha, so every copy of a 7-tuple lands in one
+  * task, the dedup's sort already orders rows the way the writer needs,
+  * and each (bucket, pred) directory gets one file. Write parallelism
+  * scales with `KgConfig.nBuckets`. `Extract.canonicalTriples` runs the
+  * same exchange. The dictionary side is one collect job; its link map
+  * needs O(|dict|) driver memory, the order of the broadcast it feeds.
+  * The 100KB `content` column never crosses a shuffle — it dies inside
+  * the narrow flatMap (SURVEY §7.4(4)).
   */
 final case class KgConfig(
     triplesDir: String,
@@ -76,8 +78,8 @@ object KgPipeline {
 
     // stages 1–4 fused per file (mention scan + relation pass +
     // broadcast-map canonicalization in ONE narrow flatMap), then the one
-    // exchange (SURVEY §4.4(4)): the dedup's salted (bucket, pred, salt)
-    // repartition, whose sort order the partitioned write reuses
+    // exchange (SURVEY §4.4(4)): the dedup's (bucket, pred) repartition,
+    // whose sort order the partitioned write reuses
     val (fnAliases, canonB) = broadcastDictionary(spark, dict)
     TableIO.writeTriples(Extract.dedup(Extract.triples(todo, fnAliases, canonB), cfg.nBuckets),
       cfg.triplesDir)
@@ -93,7 +95,7 @@ object KgPipeline {
       (b, rowCount, digest)
     }
     val nWritten = stats.map(_._2).sum
-    Manifest.write(spark, cfg.manifestDir, cfg.runId, "triples",
+    Manifest.write(cfg.manifestDir, cfg.runId, "triples",
       stats.toDF("bucket", "rowCount", "contentDigest"), attempt = 1, startedAtMs = t0,
       wallMs = System.currentTimeMillis() - t0)
     KgResult(nWritten, doneSet.size + todoBuckets.size,

@@ -23,7 +23,7 @@ object Manifest {
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("rowCount"), XorDigest(col("rowHash")).as("contentDigest"))
 
-  def write(spark: SparkSession, manifestDir: String, runId: String, stage: String,
+  def write(manifestDir: String, runId: String, stage: String,
             stats: DataFrame, attempt: Int, startedAtMs: Long, wallMs: Long): Unit = {
     stats.select(
         lit(runId).as("runId"), lit(stage).as("stage"),

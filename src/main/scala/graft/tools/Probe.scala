@@ -102,7 +102,7 @@ object Probe {
     "join_bloom_prune" -> "Build-side bloom as a SCALAR SUBQUERY (round 3 — no driver-collected binary literal in the plan) probing ahead of the exact broadcast semi-join — the exact shape of Spark's own injected runtime bloom filter.",
     "dedup_embed_cosine" -> "Round 3: self-join EQUI-KEY is the deterministic IVF cluster id (broadcast 8-centroid assignment + row_number argmax) — sub-quadratic; exact cosine verify inside the join.",
     "sink_partition_prune" -> "Read-back of a partitionBy(lang) sink with a partition-column filter: PartitionFilters prune the scan to the single lang=en directory before IO.",
-    "kg_triples_counts" -> "The full oracled DAG through the shipped Extract.canonicalTriples — one narrow MapPartitions (scan + relation pass + canonicalize fused against a broadcast link map, per-file max score, content dies inside; no join), then Extract.dedup: KgPipeline's one (bucket, pred, salt) exchange, one sort, WindowGroupLimit + row_number keeping the max-score row per 7-tuple; then the count aggregate.",
+    "kg_triples_counts" -> "The full oracled DAG through the shipped Extract.canonicalTriples — one narrow MapPartitions (scan + relation pass + canonicalize fused against a broadcast link map, per-file max score, content dies inside; no join), then Extract.dedup: KgPipeline's one exchange, hash-partitioned on (bucket expression, pred) with only the Triple fields as input, one sort, WindowGroupLimit + row_number keeping the max-score row per 7-tuple; then the count aggregate.",
     "sample_stratified" -> "Round 5: stratified sampling is a pure per-row predicate (stratum CASE → hex threshold) — the whole plan is one scan with the filter applied in a single WholeStageCodegen span, no Exchange.",
     "decontam_ngram" -> "Round 5: 3-gram decontamination — eval-slice grams distinct then BROADCAST into the semi-match; the training side is a narrow scan+explode; the per-doc countDistinct is the only data-proportional shuffle (partial_count map-side).",
     "text_repetition" -> "Round 6: repetition gate is a typed per-partition HashMap count — O(len) per row (the round-5 nested-HOF form was O(distinct×len) per row, a straggler hazard on high-vocabulary docs), still scan→mapPartitions only, zero Exchange at any corpus size.",
@@ -146,9 +146,9 @@ object Probe {
       TableIO.hashedFiles(graft.fixtures.CorpusGen.corpus(200).toDF()), fnAliases, canonB)
     dump("KG pipeline: corpus → canonical triples",
       "One narrow MapPartitions (scan + relation pass + canonicalize fused; " +
-        "content dies here), then Extract.dedup — the salted (bucket, pred, salt) " +
-        "exchange KgPipeline writes through, one sort and a row_number keep-max " +
-        "per 7-tuple, no hash aggregate.",
+        "content dies here), then Extract.dedup — the (bucket, pred) exchange " +
+        "KgPipeline writes through (Triple fields only), one sort and a " +
+        "row_number keep-max per 7-tuple, no hash aggregate.",
       triples.toDF())
     planSections.foreach { case (k, note) => dump(k, note, SparkEntry.queries(k)(spark, sfDir)) }
     sb.toString

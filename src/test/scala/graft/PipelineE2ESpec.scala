@@ -157,8 +157,15 @@ class PipelineE2ESpec extends SparkTestBase {
     val cfg1 = KgConfig(s"$d1/triples", s"$d1/manifest", "r1")
     val cfg2 = KgConfig(s"$d2/triples", s"$d2/manifest", "r1")
     val dict = KgPipeline.dictDataset(spark)
-    KgPipeline.run(spark, corpusDf(CorpusGen.TinyFiles).repartition(1), dict, cfg1)
-    KgPipeline.run(spark, corpusDf(CorpusGen.TinyFiles).repartition(13), dict, cfg2)
+    // no AQE coalescing, so every shuffle partition writes: a layout key
+    // finer than (bucket, pred) would then split a directory's rows
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.getOption(coalesce)
+    spark.conf.set(coalesce, "false")
+    try {
+      KgPipeline.run(spark, corpusDf(CorpusGen.TinyFiles).repartition(1), dict, cfg1)
+      KgPipeline.run(spark, corpusDf(CorpusGen.TinyFiles).repartition(13), dict, cfg2)
+    } finally prev.fold(spark.conf.unset(coalesce))(spark.conf.set(coalesce, _))
     assert(readTriples(d1) == readTriples(d2))
     // lineage digests must match too (commutative xor ⇒ order-invariant)
     val m1 = spark.read.parquet(s"$d1/manifest")
@@ -178,6 +185,16 @@ class PipelineE2ESpec extends SparkTestBase {
       spark.read.parquet(s"$d/manifest").select("bucket", "rowCount").collect()
         .foreach(r => assert(r.getLong(1) == distinctPerBucket.getOrElse(r.getInt(0), 0L),
           s"bucket ${r.getInt(0)} rowCount != its distinct count in $d"))
+    }
+    // the write's layout key is (bucket, pred): each directory holds one file
+    for (d <- Seq(d1, d2)) {
+      val partDirs = new java.io.File(s"$d/triples").listFiles().filter(_.getName.startsWith("bucket="))
+        .flatMap(_.listFiles().filter(_.getName.startsWith("pred=")))
+      assert(partDirs.nonEmpty, s"no bucket=*/pred=* directories in $d")
+      partDirs.foreach { p =>
+        val parts = p.listFiles().map(_.getName).filter(_.startsWith("part-"))
+        assert(parts.length == 1, s"$p holds ${parts.length} part files")
+      }
     }
   }
 

@@ -41,8 +41,9 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
-  test("canonicalTriples runs the pipeline's (bucket, pred, salt) exchange") {
-    import org.apache.spark.sql.catalyst.expressions.Attribute
+  test("canonicalTriples runs the pipeline's (bucket, pred) exchange on bare Triple rows") {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.plans.logical.Project
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import spark.implicits._
     val (fnAliases, canonB) = graft.kg.KgPipeline.broadcastDictionary(spark,
@@ -51,12 +52,19 @@ class PlanSpec extends SparkTestBase {
       graft.kg.TableIO.hashedFiles(graft.fixtures.CorpusGen.corpus(60).toDF()), fnAliases, canonB)
     val shuffles = allNodes(executed(triples.toDF())).collect { case e: ShuffleExchangeLike => e }
     assert(shuffles.size == 1, s"not one exchange:\n${executed(triples.toDF()).treeString}")
+    // the routing rule, resolved and optimized against the same fileSha/pred
+    val want = triples.select(graft.kg.TableIO.bucketOf(col("fileSha"), graft.kg.TableIO.DefaultBuckets),
+        col("pred")).queryExecution.optimizedPlan
+      .collectFirst { case p: Project => p.projectList.map { case a: Alias => a.child; case e => e } }.get
     shuffles.head.outputPartitioning match {
       case h: HashPartitioning =>
-        val keys = h.expressions.map { case a: Attribute => a.name; case e => e.sql }
-        assert(keys == Seq("bucket", "pred", "salt"), s"exchange keys: $keys")
+        assert(h.expressions.map(_.canonicalized) == want.map(_.canonicalized),
+          s"exchange keys ${h.expressions} != $want")
       case other => fail(s"exchange is not hash-partitioned: $other")
     }
+    val shipped = shuffles.head.child.output.map(_.name)
+    assert(shipped == org.apache.spark.sql.Encoders.product[graft.kg.Triple].schema.fieldNames.toSeq,
+      s"exchange input is not the bare Triple: $shipped")
   }
 
   test("KG write plan: one exchange, one sort, no hash aggregate") {
@@ -156,7 +164,7 @@ class PlanSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.FileSourceScanExec
     val dir = java.nio.file.Files.createTempDirectory("graft_trip_prune").toString
     val triples = SparkEntry.entry(spark)
-      .withColumn("bucket", pmod(xxhash64(col("fileSha")), lit(4)).cast("int"))
+      .withColumn("bucket", graft.kg.TableIO.bucketOf(col("fileSha"), 4))
     graft.kg.TableIO.writeTriples(triples, s"$dir/triples")
     val preds = spark.read.parquet(s"$dir/triples").select("pred").distinct().count()
     assert(preds >= 3, s"fixture too small: $preds preds")
