@@ -33,7 +33,7 @@ object Manifest {
         to_timestamp(lit(startedAtMs / 1000.0)).as("startedAt"),
         lit(wallMs).as("wallMs"))
       .coalesce(1)
-      .write.mode("append").parquet(manifestDir)
+      .write.mode("append").options(TableIO.LocalSinkOptions).parquet(manifestDir)
   }
 
   /** Buckets already committed for (runId, stage). */

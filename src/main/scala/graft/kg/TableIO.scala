@@ -56,6 +56,19 @@ object TableIO {
   def bucketOf(fileSha: Column, nBuckets: Int): Column =
     pmod(xxhash64(fileSha), lit(nBuckets)).cast("int")
 
+  /** Write options every graft sink passes. Spark merges write options
+    * into the job's Hadoop conf, so executor tasks and the driver's
+    * commit resolve `file:` paths to [[NioLocalFileSystem]], which sets
+    * permissions with a syscall instead of a forked `chmod` per file and
+    * directory. Only the `file:` scheme changes (HDFS/S3 paths resolve
+    * as before) and the session conf is untouched. The cache flag is
+    * needed because Hadoop's FileSystem cache key ignores the conf: a
+    * cached stock `file:` instance would otherwise be reused.
+    */
+  val LocalSinkOptions: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
   /** The triple sink: overwrite partitioned by (bucket, pred). bucket
     * gives idempotent per-bucket rewrite on resume; pred is the
     * low-cardinality read-back filter (BASELINE.json:6). Dynamic
@@ -64,6 +77,7 @@ object TableIO {
     */
   def writeTriples(triples: DataFrame, dir: String): Unit =
     triples.write.mode(SaveMode.Overwrite)
+      .options(LocalSinkOptions)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket", "pred")
       .parquet(dir)

@@ -108,12 +108,13 @@ object GraphQueries {
     // is a per-row array comprehension — src<dst by construction, no
     // join. Per-group state is bounded: TPC-H orders carry <=7 lineitems.
     // Output set is identical (sorted distinct top-10 per order, all
-    // i<j pairs, trailing distinct across orders) under one precondition:
-    // l_partkey is never NULL (a TPC-H key column). collect_set drops
-    // NULLs, while the oracle's distinct + row_number cap would count a
-    // NULL part (sorted first) among the top-10 slots and could admit a
-    // different 10th part on null-bearing data.
+    // i<j pairs, trailing distinct across orders) when l_partkey is never
+    // NULL (a TPC-H key column). The filter states that precondition: the
+    // cap counts non-NULL parts whatever the data, while the oracle's
+    // distinct + row_number cap would count a NULL part (sorted first)
+    // among the top-10 slots and could admit a different 10th part.
     t(s, d, "lineitem")
+      .where(col("l_partkey").isNotNull)
       .groupBy(col("l_orderkey").as("o"))
       .agg(slice(array_sort(collect_set(col("l_partkey"))), 1, 10).as("ps"))
       .select(explode(expr(

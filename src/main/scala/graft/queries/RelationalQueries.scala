@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.functions.{SpaceSaving, XorDigest}
+import graft.kg.TableIO
 import Tables.t
 
 /** SURVEY §2.1–§2.6 operator demonstrations over the driver testdata,
@@ -425,7 +426,8 @@ object RelationalQueries {
       (s, d) => {
         val dir = Tables.cleanupOnExit(
           "/tmp/graft_sink_docs_" + d.replaceAll("[^A-Za-z0-9.]", "_"))
-        t(s, d, "documents").write.mode("overwrite").partitionBy("lang").parquet(dir)
+        t(s, d, "documents").write.mode("overwrite")
+          .options(TableIO.LocalSinkOptions).partitionBy("lang").parquet(dir)
         s.read.parquet(dir).filter(col("lang") === "en")
           .groupBy("source")
           .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))

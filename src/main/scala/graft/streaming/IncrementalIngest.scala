@@ -46,7 +46,7 @@ object IncrementalIngest {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         Extract.canonicalTriples(TableIO.hashedFiles(batch), fnAliases, canonB)
-          .write.mode("overwrite")
+          .write.mode("overwrite").options(TableIO.LocalSinkOptions)
           .parquet(s"$outDir/batch=$batchId")
       }
       .start()

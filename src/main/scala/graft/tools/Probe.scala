@@ -167,7 +167,9 @@ object Probe {
 
   /** The fused DAG Bench times, its extract-only prefix, the scan +
     * sha256 alone, and Bench's calibration job, each best of `runs`,
-    * with listener totals per run.
+    * with listener totals per run. Each job first runs once untimed: the
+    * first run at a core count is a JIT warm-up (1–2 s for full_dag)
+    * that would otherwise sit in the min-of-N sample.
     */
   def scaling(s: SparkSession, cores: Int, corpusDir: String, runs: Int): Unit = {
     val (fnAliases, canonB) = KgPipeline.broadcastDictionary(s, KgPipeline.dictDataset(s))
@@ -178,6 +180,8 @@ object Probe {
       "scan_sha" -> (() => hashed.select(count(col("file_sha"))).head().getLong(0)),
       "calib" -> (() => f"${Bench.calibRun(s)}%.2fs"))
     for ((label, job) <- jobs) {
+      val (_, warm, _) = measured(s)(job())
+      println(f"[probe] $label@$cores warm-up=$warm%.3fs (not in best)")
       val walls = (1 to runs).map { _ =>
         val (out, wall, m) = measured(s)(job())
         println(s"[probe] $label@$cores out=$out ${m.report(wall)}")
