@@ -46,6 +46,7 @@ object Main {
     val res = KgPipeline.run(spark, corpus, KgPipeline.dictDataset(spark), cfg)
     println(s"[graft] triples written this run: ${res.triplesWritten}; " +
       s"buckets committed: ${res.bucketsCommitted}/$nBuckets; wall: ${res.wallMs} ms")
+    println(s"[graft] corpus rows read: ${res.rowsIn}; rejected by the input guards: ${res.rowsRejected}")
 
     // SQL view surface over the materialized graph
     spark.read.parquet(s"$out/triples").createOrReplaceTempView("triples")

@@ -1,7 +1,7 @@
 package graft.kg
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Full KG-construction DAG (BASELINE.json:6; SURVEY §3.2):
@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *     → fused mention scan + nearest-def relation pass + canonicalize
   *       (one narrow flatMap; per-file max score)
   *     → (bucket, pred) repartition + keep-max triple dedup → partitioned write
-  *     → per-bucket lineage manifest
+  *     → per-bucket lineage manifest, from the write's own pass
   *
   * Scale posture: the corpus-proportional data crosses ONE exchange,
   * `Extract.dedup`'s (bucket, pred) repartition, which ships only the
@@ -26,6 +26,10 @@ import org.apache.spark.sql.functions._
   * needs O(|dict|) driver memory, the order of the broadcast it feeds.
   * The 100KB `content` column never crosses a shuffle — it dies inside
   * the narrow flatMap (SURVEY §7.4(4)).
+  *
+  * Lineage and the guard counts are observations on the write action
+  * (`writeInput`), so a fresh build is the dict collect, the write and
+  * the manifest append: the run never reads the triple table back.
   */
 final case class KgConfig(
     triplesDir: String,
@@ -33,7 +37,12 @@ final case class KgConfig(
     runId: String,
     nBuckets: Int = TableIO.DefaultBuckets)
 
-final case class KgResult(triplesWritten: Long, bucketsCommitted: Int, wallMs: Long)
+/** `rowsIn` and `rowsRejected` count the corpus rows the run's write
+  * read and the ones the input guards dropped; a run with every bucket
+  * already committed reads nothing and reports 0 for both.
+  */
+final case class KgResult(triplesWritten: Long, bucketsCommitted: Int, wallMs: Long,
+                          rowsIn: Long = 0L, rowsRejected: Long = 0L)
 
 object KgPipeline {
 
@@ -53,16 +62,47 @@ object KgPipeline {
       spark.sparkContext.broadcast(Canonicalize.links(rows)))
   }
 
+  /** The triple write's input for the corpus rows in `buckets`, with the
+    * observations that ride the write action, each filled when the
+    * write runs and none adding a job: `rowsIn` counts the corpus rows,
+    * `admitted` the rows the input guards pass, and `lineage` holds
+    * `Manifest.bucketDigest` of the dedup output ("digest").
+    */
+  final case class WriteInput(triples: DataFrame, rowsIn: Observation, admitted: Observation,
+                              lineage: Observation)
+
+  def writeInput(corpus: DataFrame, buckets: Set[Int], nBuckets: Int,
+                 fnAliases: Broadcast[Set[String]], canon: Broadcast[Map[String, String]]): WriteInput = {
+    import corpus.sparkSession.implicits._
+    val (rowsIn, admitted, lineage) = (Observation(), Observation(), Observation())
+    // bare row counts on either side of the guards: a count_if over the
+    // guard predicate ahead of them projects every row (content
+    // included) and cost ≈60 ms per kgperf kg_dup build (4-vCPU host).
+    // The second count also keeps the bucket filter from being pushed
+    // below the file_sha projection, where it would hash content again
+    val todo = TableIO.withInvariants(corpus.observe(rowsIn, count(lit(1)).as("rows")), nBuckets)
+      .observe(admitted, count(lit(1)).as("rows"))
+      .filter(col("bucket").isin(buckets.toSeq: _*))
+      .select("repo", "path", "commit", "lang", "content", "file_sha")
+      .as[HashedFile]
+    // stages 1–4 fused per file (mention scan + relation pass +
+    // broadcast-map canonicalization in ONE narrow flatMap), then the one
+    // exchange (SURVEY §4.4(4)): the dedup's (bucket, pred) repartition,
+    // whose sort order the partitioned write reuses
+    val triples = Extract.dedup(Extract.triples(todo, fnAliases, canon), nBuckets)
+      .observe(lineage, Manifest.bucketDigest(nBuckets).as("digest"))
+    WriteInput(triples, rowsIn, admitted, lineage)
+  }
+
   /** Run (or resume) the pipeline. `onlyBuckets` restricts processing to a
     * bucket subset — used by tests to simulate a crash mid-run.
-    * Returns the number of triples written this invocation.
+    * Returns the number of triples written this invocation and, for the
+    * corpus rows the write read, how many the guards rejected.
     */
   def run(spark: SparkSession, corpus: DataFrame, dict: Dataset[DictEntry],
           cfg: KgConfig, onlyBuckets: Option[Set[Int]] = None): KgResult = {
     import spark.implicits._
     val t0 = System.currentTimeMillis()
-
-    val hashed = TableIO.withInvariants(corpus, cfg.nBuckets)
 
     // resume: skip committed buckets (SURVEY S5/J4)
     val doneSet = Manifest.committedBuckets(spark, cfg.manifestDir, cfg.runId, "triples")
@@ -71,34 +111,27 @@ object KgPipeline {
     if (todoBuckets.isEmpty)
       return KgResult(0L, doneSet.size, System.currentTimeMillis() - t0)
 
-    val todo = hashed
-      .filter(col("bucket").isin(todoBuckets.toSeq: _*))
-      .select("repo", "path", "commit", "lang", "content", "file_sha")
-      .as[HashedFile]
-
-    // stages 1–4 fused per file (mention scan + relation pass +
-    // broadcast-map canonicalization in ONE narrow flatMap), then the one
-    // exchange (SURVEY §4.4(4)): the dedup's (bucket, pred) repartition,
-    // whose sort order the partitioned write reuses
     val (fnAliases, canonB) = broadcastDictionary(spark, dict)
-    TableIO.writeTriples(Extract.dedup(Extract.triples(todo, fnAliases, canonB), cfg.nBuckets),
-      cfg.triplesDir)
+    val in =
+      try {
+        val in = writeInput(corpus, todoBuckets, cfg.nBuckets, fnAliases, canonB)
+        TableIO.writeTriples(in.triples, cfg.triplesDir)
+        in
+      } finally {
+        fnAliases.destroy()
+        canonB.destroy()
+      }
 
-    // lineage from what actually landed on disk (SURVEY A7/S5), read
-    // back once; todo buckets that got no triples commit as (0, 0)
-    val written = spark.read.parquet(cfg.triplesDir)
-      .filter(col("bucket").isin(todoBuckets.toSeq: _*))
-    val landed = Manifest.bucketStats(written).collect()
-      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val stats = todoBuckets.toSeq.sorted.map { b =>
-      val (rowCount, digest) = landed.getOrElse(b, (0L, 0L))
-      (b, rowCount, digest)
-    }
+    // lineage from the write's own pass (SURVEY A7/S5): the digest its
+    // successful tasks observed, no read-back of the triple table; todo
+    // buckets that got no triples commit as (0, 0)
+    val stats = Manifest.digestRows(in.lineage.get("digest").asInstanceOf[collection.Seq[Long]], todoBuckets)
     val nWritten = stats.map(_._2).sum
     Manifest.write(cfg.manifestDir, cfg.runId, "triples",
       stats.toDF("bucket", "rowCount", "contentDigest"), attempt = 1, startedAtMs = t0,
       wallMs = System.currentTimeMillis() - t0)
-    KgResult(nWritten, doneSet.size + todoBuckets.size,
-      System.currentTimeMillis() - t0)
+    def rows(o: Observation) = o.get("rows").asInstanceOf[Long]
+    KgResult(nWritten, doneSet.size + todoBuckets.size, System.currentTimeMillis() - t0,
+      rowsIn = rows(in.rowsIn), rowsRejected = rows(in.rowsIn) - rows(in.admitted))
   }
 }

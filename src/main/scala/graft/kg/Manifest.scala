@@ -1,6 +1,8 @@
 package graft.kg
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.functions.XorDigest
 
@@ -10,8 +12,17 @@ import graft.functions.XorDigest
   * = filter the corpus to uncommitted buckets; the triple writer
   * uses dynamic partition overwrite so a half-written (uncommitted)
   * bucket is idempotently rewritten on the next attempt.
+  *
+  * A bucket's lineage is (rowCount, contentDigest): its row count and
+  * the xor of `xxhash64` over each row's `Extract.TripleKey`. The run
+  * computes it in the triple write's own pass (`bucketDigest`, observed
+  * on the write's input), so it records what the write action's
+  * successful tasks wrote; `bucketStats` is the same figure computed
+  * from a table on disk.
   */
 object Manifest {
+
+  private def rowHash: Column = xxhash64(Extract.TripleKey.map(col): _*)
 
   /** Per-bucket lineage rows for a triple DataFrame: row count + a
     * commutative xor digest of the full triple identity (order- and
@@ -19,9 +30,48 @@ object Manifest {
     */
   def bucketStats(triples: DataFrame): DataFrame =
     triples
-      .withColumn("rowHash", xxhash64(Extract.TripleKey.map(col): _*))
+      .withColumn("rowHash", rowHash)
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("rowCount"), XorDigest(col("rowHash")).as("contentDigest"))
+
+  /** Every bucket's (rowCount, contentDigest) in one buffer: slot b
+    * counts bucket b's rows, slot nBuckets + b xors their hashes. One
+    * typed aggregate over (bucket, hash), so an observed metric costs
+    * one array update per row, not 2·nBuckets conditional aggregates.
+    */
+  private final class BucketDigest(nBuckets: Int)
+      extends Aggregator[(Int, Long), Array[Long], Array[Long]] {
+    def zero: Array[Long] = new Array[Long](2 * nBuckets)
+    def reduce(b: Array[Long], row: (Int, Long)): Array[Long] = {
+      b(row._1) += 1
+      b(nBuckets + row._1) ^= row._2
+      b
+    }
+    def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
+      var i = 0
+      while (i < nBuckets) { b1(i) += b2(i); b1(nBuckets + i) ^= b2(nBuckets + i); i += 1 }
+      b1
+    }
+    def finish(b: Array[Long]): Array[Long] = b
+    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+  }
+
+  /** `bucketStats` of a triple DataFrame (one with a `bucket` column) as
+    * one aggregate column, for `Dataset.observe` on a write's input;
+    * `digestRows` turns its value into manifest rows.
+    */
+  def bucketDigest(nBuckets: Int): Column =
+    udaf(new BucketDigest(nBuckets), Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong))(
+      col("bucket"), rowHash)
+
+  /** (bucket, rowCount, contentDigest) for each of `buckets`, read off a
+    * `bucketDigest` value; a bucket with no rows is (0, 0).
+    */
+  def digestRows(digest: collection.Seq[Long], buckets: Set[Int]): Seq[(Int, Long, Long)] = {
+    val nBuckets = digest.length / 2
+    buckets.toSeq.sorted.map(b => (b, digest(b), digest(nBuckets + b)))
+  }
 
   def write(manifestDir: String, runId: String, stage: String,
             stats: DataFrame, attempt: Int, startedAtMs: Long, wallMs: Long): Unit = {

@@ -21,10 +21,12 @@ import graft.kg._
   *   runMain graft.tools.Probe cc <sfDir>
   *   runMain graft.tools.Probe scaling <nfiles> <cores,...> [runs] [corpusDir]
   *   runMain graft.tools.Probe layout [nFiles]
+  *   runMain graft.tools.Probe lineage <outDir> [runId]
   *
-  * `time`, `explain`, `cc` and `layout` run in one Bench part-1 session
-  * at `local[$SPARK_GRAFT_CPUS]` (default 4); `scaling` opens one Bench
-  * part-2 session per listed core count. Only `main` builds sessions.
+  * `time`, `explain`, `cc`, `layout` and `lineage` run in one Bench
+  * part-1 session at `local[$SPARK_GRAFT_CPUS]` (default 4); `scaling`
+  * opens one Bench part-2 session per listed core count. Only `main`
+  * builds sessions.
   */
 object Probe {
 
@@ -142,14 +144,17 @@ object Probe {
       sb.append("```\n")
     }
     val (fnAliases, canonB) = KgPipeline.broadcastDictionary(spark, KgPipeline.dictDataset(spark))
-    val triples = Extract.canonicalTriples(
-      TableIO.hashedFiles(graft.fixtures.CorpusGen.corpus(200).toDF()), fnAliases, canonB)
-    dump("KG pipeline: corpus → canonical triples",
-      "One narrow MapPartitions (scan + relation pass + canonicalize fused; " +
-        "content dies here), then Extract.dedup — the (bucket, pred) exchange " +
-        "KgPipeline writes through (Triple fields only), one sort and a " +
-        "row_number keep-max per 7-tuple, no hash aggregate.",
-      triples.toDF())
+    val input = KgPipeline.writeInput(graft.fixtures.CorpusGen.corpus(200).toDF(),
+      (0 until TableIO.DefaultBuckets).toSet, TableIO.DefaultBuckets, fnAliases, canonB)
+    dump("KG pipeline: corpus → the triple write's input",
+      "KgPipeline.writeInput, what a fresh run writes: a CollectMetrics row count on " +
+        "either side of the guard Filter (rows in, rows admitted), one narrow MapPartitions " +
+        "(scan + relation pass + canonicalize fused; content dies here), then " +
+        "Extract.dedup — the (bucket, pred) exchange (Triple fields only), one sort and " +
+        "a row_number keep-max per 7-tuple, no hash aggregate — and CollectMetrics on " +
+        "top: the manifest's per-bucket (rowCount, contentDigest), taken in the write's " +
+        "own pass instead of a read-back.",
+      input.triples)
     planSections.foreach { case (k, note) => dump(k, note, SparkEntry.queries(k)(spark, sfDir)) }
     sb.toString
   }
@@ -210,6 +215,25 @@ object Probe {
     }
   }
 
+  /** A `graft.Main` output's lineage against its disk: each committed
+    * bucket's manifest (rowCount, contentDigest) for `runId` beside
+    * `Manifest.bucketStats` of the triple table ((0, 0) for a bucket
+    * with no rows). Returns the buckets that differ.
+    */
+  def lineage(spark: SparkSession, out: String, runId: String): Seq[Int] = {
+    def stats(df: DataFrame) = df.select("bucket", "rowCount", "contentDigest").collect()
+      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val manifest = stats(spark.read.parquet(s"$out/manifest")
+      .filter(col("runId") === runId && col("stage") === "triples"))
+    val disk = stats(Manifest.bucketStats(spark.read.parquet(s"$out/triples")))
+    val differ = (manifest.keySet ++ disk.keySet).toSeq.sorted
+      .filterNot(b => manifest.get(b).contains(disk.getOrElse(b, (0L, 0L))))
+    println(s"[probe] lineage $out: ${manifest.size} committed buckets, " +
+      s"${manifest.values.map(_._1).sum} manifest rows, ${disk.values.map(_._1).sum} on disk; " +
+      s"${differ.size} buckets differ${if (differ.isEmpty) "" else differ.mkString(": ", ",", "")}")
+    differ
+  }
+
   def main(args: Array[String]): Unit = {
     // Bench part 1's core count; also the geometry the corpora are built
     // at (the skew corpus has one file per shuffle partition)
@@ -233,12 +257,14 @@ object Probe {
         cores.split(",").map(_.toInt).foreach { c =>
           withSession(c, smallSplits = true)(scaling(_, c, dir, runs))
         }
+      case "lineage" :: out :: rest if rest.size <= 1 =>
+        withSession(cpus, smallSplits = false)(lineage(_, out, rest.headOption.getOrElse("run-1")))
       case "layout" :: rest if rest.size <= 1 => withSession(cpus, smallSplits = false) { s =>
         layout(s, Bench.materializeCorpora(s, rest.headOption.fold(400000)(_.toInt)))
       }
       case _ =>
         sys.error("usage: Probe time <sfDir> <reps> <key>... | explain <sfDir> | cc <sfDir> | " +
-          "scaling <nfiles> <cores,...> [runs] [corpusDir] | layout [nFiles]")
+          "scaling <nfiles> <cores,...> [runs] [corpusDir] | layout [nFiles] | lineage <outDir> [runId]")
     }
   }
 }

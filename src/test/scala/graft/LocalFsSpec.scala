@@ -97,8 +97,13 @@ class LocalFsSpec extends SparkTestBase {
         KgPipeline.dictDataset(spark), cfg)
     }
     // one build first, outside the recording: one-time JVM and Hadoop
-    // class initialisation may start a process, a build must not
+    // class initialisation may start a process, a build must not. The
+    // executor heartbeat's first tick, 10–20 s after the context starts,
+    // initialises Spark's procfs metrics reader, which forks `getconf
+    // PAGESIZE` once per JVM; initialise it here so that tick cannot
+    // land inside the recording
     build(Files.createTempDirectory("localfs-warm"))
+    Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
     val rec = new Recording()
     rec.enable("jdk.ProcessStart")
     rec.start()

@@ -29,6 +29,24 @@ class PipelineE2ESpec extends SparkTestBase {
     KgPipeline.run(spark, corpusDf(n), KgPipeline.dictDataset(spark), cfg, onlyBuckets)
   }
 
+  private def manifestRows(dir: String): Map[Int, (Long, Long)] = {
+    val rows = spark.read.parquet(s"$dir/manifest").select("bucket", "rowCount", "contentDigest")
+      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2)))
+    assert(rows.map(_._1).distinct.length == rows.length, s"a bucket committed twice in $dir")
+    rows.toMap
+  }
+
+  /** The lineage the run took from its write equals the disk: each
+    * committed bucket's (rowCount, contentDigest) is `bucketStats` of the
+    * triple table ((0, 0) for a bucket with no rows), and the run's
+    * `triplesWritten` is the rowCount sum of the buckets it committed.
+    */
+  private def assertReconciled(dir: String, res: KgResult, committedBefore: Set[Int]): Unit = {
+    val differ = graft.tools.Probe.lineage(spark, dir, "r1")
+    assert(differ.isEmpty, s"manifest and disk differ in buckets $differ of $dir")
+    assert(res.triplesWritten == (manifestRows(dir) -- committedBefore).values.map(_._1).sum)
+  }
+
   private def readTriples(dir: String): Set[Seq[String]] = {
     spark.read.parquet(s"$dir/triples")
       .select(tripleKey.map(col): _*).collect()
@@ -129,6 +147,7 @@ class PipelineE2ESpec extends SparkTestBase {
     assert(viaRun == want,
       s"KgPipeline.run: spurious=${(viaRun.toSet -- want).take(3)} missed=${(want.toSet -- viaRun).take(3)}")
     assert(res.triplesWritten == want.size)
+    assertReconciled(dir, res, Set.empty)
 
     // the flatMap emits each 7-tuple once per corpus row: its count is
     // exactly the number of copies of the file it came from
@@ -162,11 +181,13 @@ class PipelineE2ESpec extends SparkTestBase {
     val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
     val prev = spark.conf.getOption(coalesce)
     spark.conf.set(coalesce, "false")
-    try {
-      KgPipeline.run(spark, corpusDf(CorpusGen.TinyFiles).repartition(1), dict, cfg1)
-      KgPipeline.run(spark, corpusDf(CorpusGen.TinyFiles).repartition(13), dict, cfg2)
+    val (r1, r2) = try {
+      (KgPipeline.run(spark, corpusDf(CorpusGen.TinyFiles).repartition(1), dict, cfg1),
+        KgPipeline.run(spark, corpusDf(CorpusGen.TinyFiles).repartition(13), dict, cfg2))
     } finally prev.fold(spark.conf.unset(coalesce))(spark.conf.set(coalesce, _))
     assert(readTriples(d1) == readTriples(d2))
+    assertReconciled(d1, r1, Set.empty)
+    assertReconciled(d2, r2, Set.empty)
     // lineage digests must match too (commutative xor ⇒ order-invariant)
     val m1 = spark.read.parquet(s"$d1/manifest")
       .select("bucket", "rowCount", "contentDigest").collect()
@@ -201,8 +222,7 @@ class PipelineE2ESpec extends SparkTestBase {
   test("manifest commits every todo bucket, empty ones as (0, 0)") {
     val dir = tmp("kg-sparse")
     val res = runPipeline(2, dir)
-    val m = spark.read.parquet(s"$dir/manifest").select("bucket", "rowCount", "contentDigest")
-      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val m = manifestRows(dir)
     assert(m.keySet == (0 until 16).toSet)
     val landed = spark.read.parquet(s"$dir/triples").select("bucket").distinct()
       .collect().map(_.getInt(0)).toSet
@@ -216,13 +236,15 @@ class PipelineE2ESpec extends SparkTestBase {
     // uninterrupted run
     runPipeline(CorpusGen.TinyFiles, full)
     // interrupted run: only buckets 0..7 commit, then "crash"
-    runPipeline(CorpusGen.TinyFiles, resumed, onlyBuckets = Some((0 until 8).toSet))
+    val res1 = runPipeline(CorpusGen.TinyFiles, resumed, onlyBuckets = Some((0 until 8).toSet))
     val manifestAfterCrash = spark.read.parquet(s"$resumed/manifest")
       .select("bucket").collect().map(_.getInt(0)).toSet
     assert(manifestAfterCrash == (0 until 8).toSet)
+    assertReconciled(resumed, res1, Set.empty)
     // resume completes the rest
     val res2 = runPipeline(CorpusGen.TinyFiles, resumed)
     assert(res2.bucketsCommitted == 16)
+    assertReconciled(resumed, res2, manifestAfterCrash)
     assert(readTriples(resumed) == readTriples(full))
     // no committed bucket reprocessed: manifest has exactly one row per bucket
     val counts = spark.read.parquet(s"$resumed/manifest")
@@ -231,6 +253,98 @@ class PipelineE2ESpec extends SparkTestBase {
     // third run is a no-op
     val res3 = runPipeline(CorpusGen.TinyFiles, resumed)
     assert(res3.triplesWritten == 0L)
+    assertReconciled(resumed, res3, (0 until 16).toSet)
+  }
+
+  /** Runs `corpus` into a fresh directory with a deadline: a run whose
+    * lineage never arrives fails here instead of hanging the suite.
+    */
+  private def runWithin(corpus: org.apache.spark.sql.DataFrame): (String, KgResult) = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val dir = tmp("kg-deadline")
+    val cfg = KgConfig(s"$dir/triples", s"$dir/manifest", runId = "r1")
+    dir -> Await.result(Future(KgPipeline.run(spark, corpus, KgPipeline.dictDataset(spark), cfg)), 3.minutes)
+  }
+
+  test("a corpus that yields no triples still commits 16 buckets as (0, 0)") {
+    import spark.implicits._
+    val oversize = "x" * (TableIO.MaxContentChars + 1)
+    val rejected = Seq(
+      CodeFile("org/a", "a.py", "c0", "python", null),
+      CodeFile("org/a", "b.py", "c0", "python", ""),
+      CodeFile("org/a", "c.py", "c0", "python", oversize),
+      CodeFile(null, "d.py", "c0", "python", "def f():\n    g()\n"))
+    // from parquet the rejects are found at run time, so AQE sees the
+    // empty exchange; in memory the optimizer folds the plan to empty
+    val parquet = tmp("kg-rejected")
+    rejected.toDF().write.mode("overwrite").parquet(parquet)
+    for ((label, rows, df) <- Seq(
+        ("empty corpus", Seq.empty[CodeFile], Seq.empty[CodeFile].toDF()),
+        ("all rows rejected", rejected, rejected.toDF()),
+        ("all rows rejected, read from parquet", rejected, spark.read.parquet(parquet)))) {
+      val (dir, res) = runWithin(df)
+      assert(res.triplesWritten == 0L && res.bucketsCommitted == 16, label)
+      assert(res.rowsIn == rows.size && res.rowsRejected == rows.size, s"$label: $res")
+      assert(manifestRows(dir) == (0 until 16).map(_ -> ((0L, 0L))).toMap, label)
+    }
+  }
+
+  test("guard rejects are counted: rows in = admitted + rejected") {
+    import spark.implicits._
+    val good = CorpusGen.corpus(40)
+    val planted = Seq(
+      CodeFile("org/p", "null.py", "c0", "python", null),
+      CodeFile(null, "norepo.py", "c0", "python", "import os\n"),
+      CodeFile("org/p", "nolang.py", "c0", null, "import os\n"),
+      CodeFile("org/p", "empty.py", "c0", "python", ""),
+      CodeFile("org/p", "big.py", "c0", "python", "y" * (TableIO.MaxContentChars + 1)))
+    val corpus = (good.take(20) ++ planted ++ good.drop(20)).toDF()
+    val (dir, res) = runWithin(corpus)
+    val admitted = TableIO.withInvariants(corpus, 16).count()
+    assert(admitted == good.size)
+    assert(res.rowsRejected == planted.size, s"$res")
+    assert(res.rowsIn == admitted + res.rowsRejected, s"$res")
+    assertReconciled(dir, res, Set.empty)
+  }
+
+  test("a fresh run submits no job after the triple write but the manifest append") {
+    import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val jobs = new ConcurrentLinkedQueue[(Int, Long)]()
+    val plans = new ConcurrentHashMap[Long, String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val exec = Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        jobs.add(j.jobId -> exec.fold(-1L)(_.toLong))
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.put(s.executionId, s.physicalPlanDescription)
+        case _ => ()
+      }
+    }
+    val dir = tmp("kg-jobs")
+    org.apache.spark.GraftBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      runPipeline(CorpusGen.TinyFiles, dir)
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    def writesTo(sub: String): Set[Long] = plans.asScala.collect {
+      case (id, plan) if plan.contains("InsertIntoHadoopFsRelationCommand") && plan.contains(s"$dir/$sub") => id
+    }.toSet
+    val (tripleWrite, manifestWrite) = (writesTo("triples"), writesTo("manifest"))
+    val ordered = jobs.asScala.toSeq.sortBy(_._1)
+    val lastWriteJob = ordered.lastIndexWhere(j => tripleWrite(j._2))
+    assert(lastWriteJob >= 0, s"no job of the triple write among $ordered")
+    val after = ordered.drop(lastWriteJob + 1)
+    assert(after.nonEmpty && after.forall(j => manifestWrite(j._2)),
+      s"jobs after the triple write: $after; manifest append execution(s) $manifestWrite")
+    info(s"${ordered.size} jobs: ${ordered.count(j => tripleWrite(j._2))} in the triple write, " +
+      s"${after.size} after it")
   }
 
   test("run leaves the caller's session config as it found it") {
