@@ -148,7 +148,7 @@ object Extract {
     triples(ds, fnAliases, ds.sparkSession.sparkContext.broadcast(Map.empty[String, String]))
 
   /** The 7-tuple that identifies a triple; `score` rides along. */
-  private[kg] val TripleKey: Seq[String] = Seq("subj", "pred", "obj", "repo", "path", "commit", "fileSha")
+  private[graft] val TripleKey: Seq[String] = Seq("subj", "pred", "obj", "repo", "path", "commit", "fileSha")
 
   /** Stages 1–4 fused: corpus → CANONICAL triples in one narrow
     * `mapPartitions` of `fileTriples`. The norm→canonical link map is

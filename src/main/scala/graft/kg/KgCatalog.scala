@@ -25,6 +25,6 @@ object KgCatalog {
     triplesDir.foreach(dir =>
       spark.read.parquet(dir).createOrReplaceTempView("triples"))
     manifestDir.foreach(dir =>
-      spark.read.parquet(dir).createOrReplaceTempView("manifest"))
+      Manifest.read(spark, dir).createOrReplaceTempView("manifest"))
   }
 }

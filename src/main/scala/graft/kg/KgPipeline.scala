@@ -101,11 +101,10 @@ object KgPipeline {
     */
   def run(spark: SparkSession, corpus: DataFrame, dict: Dataset[DictEntry],
           cfg: KgConfig, onlyBuckets: Option[Set[Int]] = None): KgResult = {
-    import spark.implicits._
     val t0 = System.currentTimeMillis()
 
     // resume: skip committed buckets (SURVEY S5/J4)
-    val doneSet = Manifest.committedBuckets(spark, cfg.manifestDir, cfg.runId, "triples")
+    val doneSet = Manifest.committed(spark, cfg.manifestDir, cfg.runId).keySet
     val allTodo = (0 until cfg.nBuckets).filterNot(doneSet).toSet
     val todoBuckets = onlyBuckets.map(_ intersect allTodo).getOrElse(allTodo)
     if (todoBuckets.isEmpty)
@@ -125,13 +124,10 @@ object KgPipeline {
     // lineage from the write's own pass (SURVEY A7/S5): the digest its
     // successful tasks observed, no read-back of the triple table; todo
     // buckets that got no triples commit as (0, 0)
-    val stats = Manifest.digestRows(in.lineage.get("digest").asInstanceOf[collection.Seq[Long]], todoBuckets)
-    val nWritten = stats.map(_._2).sum
-    Manifest.write(cfg.manifestDir, cfg.runId, "triples",
-      stats.toDF("bucket", "rowCount", "contentDigest"), attempt = 1, startedAtMs = t0,
-      wallMs = System.currentTimeMillis() - t0)
+    val committed = Manifest.commit(spark, cfg.manifestDir, cfg.runId,
+      in.lineage.get("digest").asInstanceOf[collection.Seq[Long]], todoBuckets, startedAtMs = t0)
     def rows(o: Observation) = o.get("rows").asInstanceOf[Long]
-    KgResult(nWritten, doneSet.size + todoBuckets.size, System.currentTimeMillis() - t0,
+    KgResult(committed.map(_._2).sum, doneSet.size + todoBuckets.size, System.currentTimeMillis() - t0,
       rowsIn = rows(in.rowsIn), rowsRejected = rows(in.rowsIn) - rows(in.admitted))
   }
 }

@@ -1,15 +1,18 @@
 package graft.kg
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.functions.XorDigest
 
 /** Per-partition lineage + checkpointed resumability (BASELINE.json:6,14;
-  * SURVEY S5/A7). The manifest is an append-only parquet table; a bucket
-  * is COMMITTED once its manifest row (status='committed') exists. Resume
-  * = filter the corpus to uncommitted buckets; the triple writer
+  * SURVEY S5/A7). The manifest is an append-only parquet table of
+  * `Schema` rows; a bucket is COMMITTED once its row for the run exists,
+  * and a row is appended only after the bucket's triple write commits.
+  * Resume = filter the corpus to uncommitted buckets; the triple writer
   * uses dynamic partition overwrite so a half-written (uncommitted)
   * bucket is idempotently rewritten on the next attempt.
   *
@@ -21,6 +24,15 @@ import graft.functions.XorDigest
   * from a table on disk.
   */
 object Manifest {
+
+  /** A manifest row: a bucket of run `runId` committed with this lineage;
+    * `startedAt` is when that run began. Built field by field: `fromDDL`
+    * would run the SQL parser, whose DFA cache stays on the driver heap.
+    */
+  val Schema: StructType = new StructType()
+    .add("runId", StringType).add("bucket", IntegerType)
+    .add("rowCount", LongType).add("contentDigest", LongType)
+    .add("startedAt", TimestampType)
 
   private def rowHash: Column = xxhash64(Extract.TripleKey.map(col): _*)
 
@@ -59,44 +71,50 @@ object Manifest {
 
   /** `bucketStats` of a triple DataFrame (one with a `bucket` column) as
     * one aggregate column, for `Dataset.observe` on a write's input;
-    * `digestRows` turns its value into manifest rows.
+    * `commit` turns its value into manifest rows.
     */
   def bucketDigest(nBuckets: Int): Column =
     udaf(new BucketDigest(nBuckets), Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong))(
       col("bucket"), rowHash)
 
-  /** (bucket, rowCount, contentDigest) for each of `buckets`, read off a
-    * `bucketDigest` value; a bucket with no rows is (0, 0).
+  /** Appends one row per bucket of `buckets` for `runId`, its lineage
+    * read off `digest` (a `bucketDigest` value; a bucket with no rows is
+    * (0, 0)), and returns the committed (bucket, rowCount, contentDigest)
+    * rows. Call it only after the buckets' triple write has committed:
+    * the row is the commit.
     */
-  def digestRows(digest: collection.Seq[Long], buckets: Set[Int]): Seq[(Int, Long, Long)] = {
+  def commit(spark: SparkSession, manifestDir: String, runId: String,
+             digest: collection.Seq[Long], buckets: Set[Int], startedAtMs: Long): Seq[(Int, Long, Long)] = {
     val nBuckets = digest.length / 2
-    buckets.toSeq.sorted.map(b => (b, digest(b), digest(nBuckets + b)))
-  }
-
-  def write(manifestDir: String, runId: String, stage: String,
-            stats: DataFrame, attempt: Int, startedAtMs: Long, wallMs: Long): Unit = {
-    stats.select(
-        lit(runId).as("runId"), lit(stage).as("stage"),
-        col("bucket").cast("int").as("bucket"),
-        col("rowCount").cast("long"), col("contentDigest").cast("long"),
-        lit("committed").as("status"), lit(attempt).as("attempt"),
-        to_timestamp(lit(startedAtMs / 1000.0)).as("startedAt"),
-        lit(wallMs).as("wallMs"))
+    val rows = buckets.toSeq.sorted.map(b => (b, digest(b), digest(nBuckets + b)))
+    // an Instant, not a java.sql.Timestamp: converting the latter loads
+    // Spark's Julian-calendar rebase tables (≈0.5 MB kept for good)
+    val startedAt = java.time.Instant.ofEpochMilli(startedAtMs)
+    spark.createDataFrame(rows.map { case (b, n, d) => Row(runId, b, n, d, startedAt) }.asJava, Schema)
       .coalesce(1)
       .write.mode("append").options(TableIO.LocalSinkOptions).parquet(manifestDir)
+    rows
   }
 
-  /** Buckets already committed for (runId, stage). */
-  def committedBuckets(spark: SparkSession, manifestDir: String,
-                       runId: String, stage: String): Set[Int] = {
+  /** Every manifest row under `manifestDir`, read with `Schema`: a dir
+    * that does not exist, or holds no data file yet (a first append that
+    * died left only `_temporary/`), reads as no rows, and a file written
+    * with more columns reads as these.
+    */
+  def read(spark: SparkSession, manifestDir: String): DataFrame = {
     // Hadoop FileSystem, not java.io.File: the manifest dir may live on
     // any supported filesystem (HDFS/S3A/local) in production
     val p = new org.apache.hadoop.fs.Path(manifestDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Set.empty
-    else spark.read.parquet(manifestDir)
-      .filter(col("runId") === runId && col("stage") === stage &&
-        col("status") === "committed")
-      .select(col("bucket")).distinct().collect().map(_.getInt(0)).toSet
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      spark.read.schema(Schema).parquet(manifestDir)
+    else spark.createDataFrame(java.util.List.of[Row](), Schema)
   }
+
+  /** The buckets committed for `runId`, each with its (rowCount,
+    * contentDigest).
+    */
+  def committed(spark: SparkSession, manifestDir: String, runId: String): Map[Int, (Long, Long)] =
+    read(spark, manifestDir).filter(col("runId") === runId)
+      .select("bucket", "rowCount", "contentDigest").collect()
+      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
 }

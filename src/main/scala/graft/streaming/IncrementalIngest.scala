@@ -12,9 +12,10 @@ import graft.kg._
   * adds the streaming-native variant for continuously-arriving corpora:
   *
   *   readStream(parquet dir) → Trigger.AvailableNow (drain backlog, stop)
-  *   → foreachBatch: fused extract+canonicalize → triples written to a
-  *     batch-keyed partition (overwrite ⇒ idempotent under batch replay,
-  *     the standard exactly-once foreachBatch pattern).
+  *   → foreachBatch: fused extract+canonicalize → anti-join against the
+  *     7-tuples earlier batches wrote → triples written to a batch-keyed
+  *     partition (overwrite ⇒ idempotent under batch replay, the
+  *     standard exactly-once foreachBatch pattern).
   *
   * Spark's streaming checkpoint tracks which input files were consumed,
   * so a rerun processes only newly arrived corpus files — the streaming
@@ -35,6 +36,8 @@ object IncrementalIngest {
           checkpointDir: String): Unit = {
     val dict = KgPipeline.dictDataset(spark)
     val (fnAliases, canonB) = KgPipeline.broadcastDictionary(spark, dict)
+    val out = new org.apache.hadoop.fs.Path(outDir)
+    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     val stream = spark.readStream
       .schema(TableIO.corpusSchema)
@@ -45,8 +48,18 @@ object IncrementalIngest {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Extract.canonicalTriples(TableIO.hashedFiles(batch), fnAliases, canonB)
-          .write.mode("overwrite").options(TableIO.LocalSinkOptions)
+        val triples = Extract.canonicalTriples(TableIO.hashedFiles(batch), fnAliases, canonB)
+        // a file re-delivered in a later arrival yields 7-tuples an
+        // earlier batch already wrote: drop them. Only batches before
+        // this one count, so a replayed batch rewrites the same rows
+        val fresh =
+          if (!fs.exists(out)) triples.toDF()
+          else triples.join(
+              spark.read.schema(triples.schema.add("batch", LongType)).parquet(outDir)
+                .filter(col("batch") < batchId),
+              Extract.TripleKey, "left_anti")
+            .select(triples.columns.toSeq.map(col): _*)
+        fresh.write.mode("overwrite").options(TableIO.LocalSinkOptions)
           .parquet(s"$outDir/batch=$batchId")
       }
       .start()

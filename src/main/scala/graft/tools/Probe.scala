@@ -221,11 +221,9 @@ object Probe {
     * with no rows). Returns the buckets that differ.
     */
   def lineage(spark: SparkSession, out: String, runId: String): Seq[Int] = {
-    def stats(df: DataFrame) = df.select("bucket", "rowCount", "contentDigest").collect()
+    val manifest = Manifest.committed(spark, s"$out/manifest", runId)
+    val disk = Manifest.bucketStats(spark.read.parquet(s"$out/triples")).collect()
       .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val manifest = stats(spark.read.parquet(s"$out/manifest")
-      .filter(col("runId") === runId && col("stage") === "triples"))
-    val disk = stats(Manifest.bucketStats(spark.read.parquet(s"$out/triples")))
     val differ = (manifest.keySet ++ disk.keySet).toSeq.sorted
       .filterNot(b => manifest.get(b).contains(disk.getOrElse(b, (0L, 0L))))
     println(s"[probe] lineage $out: ${manifest.size} committed buckets, " +

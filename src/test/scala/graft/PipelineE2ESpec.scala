@@ -30,7 +30,7 @@ class PipelineE2ESpec extends SparkTestBase {
   }
 
   private def manifestRows(dir: String): Map[Int, (Long, Long)] = {
-    val rows = spark.read.parquet(s"$dir/manifest").select("bucket", "rowCount", "contentDigest")
+    val rows = Manifest.read(spark, s"$dir/manifest").select("bucket", "rowCount", "contentDigest")
       .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2)))
     assert(rows.map(_._1).distinct.length == rows.length, s"a bucket committed twice in $dir")
     rows.toMap
@@ -254,6 +254,53 @@ class PipelineE2ESpec extends SparkTestBase {
     val res3 = runPipeline(CorpusGen.TinyFiles, resumed)
     assert(res3.triplesWritten == 0L)
     assertReconciled(resumed, res3, (0 until 16).toSet)
+  }
+
+  test("resume after a run died in its first manifest append: every bucket commits") {
+    val full = tmp("kg-full"); val dir = tmp("kg-torn-manifest")
+    runPipeline(CorpusGen.TinyFiles, full)
+    // the triple write committed, the first manifest append did not:
+    // the manifest dir holds only the append's `_temporary/`
+    runPipeline(CorpusGen.TinyFiles, dir)
+    val manifest = new java.io.File(s"$dir/manifest")
+    org.apache.commons.io.FileUtils.deleteDirectory(manifest)
+    assert(new java.io.File(manifest, "_temporary/0").mkdirs())
+    val res = runPipeline(CorpusGen.TinyFiles, dir)
+    assert(res.bucketsCommitted == 16)
+    assert(manifestRows(dir).keySet == (0 until 16).toSet)
+    assertReconciled(dir, res, Set.empty)
+    assert(readTriples(dir) == readTriples(full))
+  }
+
+  test("a manifest row in the older nine-column shape still counts as committed") {
+    import spark.implicits._
+    val full = tmp("kg-full"); val dir = tmp("kg-old-manifest")
+    runPipeline(CorpusGen.TinyFiles, full)
+    // bucket 3 committed by a build whose manifest also held the
+    // constant columns stage, status, attempt and wallMs
+    runPipeline(CorpusGen.TinyFiles, dir, onlyBuckets = Some(Set(3)))
+    val (rowCount, contentDigest) = manifestRows(dir)(3)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/manifest"))
+    Seq(("r1", "triples", 3, rowCount, contentDigest, "committed", 1,
+        java.sql.Timestamp.valueOf("2026-01-01 00:00:00"), 1234L))
+      .toDF("runId", "stage", "bucket", "rowCount", "contentDigest", "status", "attempt",
+        "startedAt", "wallMs")
+      .write.parquet(s"$dir/manifest")
+    val planted = new java.io.File(s"$dir/manifest").list().filter(_.endsWith(".parquet")).toSet
+    val res = runPipeline(CorpusGen.TinyFiles, dir)
+    assert(res.bucketsCommitted == 16)
+    assert(manifestRows(dir)(3) == ((rowCount, contentDigest)), "bucket 3 was reprocessed")
+    assertReconciled(dir, res, Set(3))
+    assert(readTriples(dir) == readTriples(full))
+    // this run appended rows of the declared shape beside the old file
+    val appended = new java.io.File(s"$dir/manifest").listFiles()
+      .filter(f => f.getName.endsWith(".parquet") && !planted(f.getName))
+    assert(appended.nonEmpty)
+    appended.foreach(f => assert(spark.read.parquet(f.getPath).schema.fieldNames.toSeq ==
+      Manifest.Schema.fieldNames.toSeq, f.getName))
+    // and a manifest holding both shapes resumes as a no-op
+    val again = runPipeline(CorpusGen.TinyFiles, dir)
+    assert(again.triplesWritten == 0L && again.bucketsCommitted == 16)
   }
 
   /** Runs `corpus` into a fresh directory with a deadline: a run whose

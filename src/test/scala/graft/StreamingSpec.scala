@@ -27,8 +27,10 @@ class StreamingSpec extends SparkTestBase {
     val afterFirst = spark.read.parquet(outDir).count()
     assert(afterFirst > 0)
 
-    // arrival 2 → only the new files are processed (checkpoint resume)
-    all.drop(30).toDF().write.mode("append").parquet(corpusDir)
+    // arrival 2 → only the new files are processed (checkpoint resume);
+    // it re-delivers five arrival-1 files in a new parquet file, whose
+    // triples were written by arrival 1 already
+    (all.drop(30) ++ all.take(5)).toDF().write.mode("append").parquet(corpusDir)
     IncrementalIngest.run(spark, corpusDir, outDir, ckpt)
 
     val key = Seq("subj", "pred", "obj", "repo", "path", "commit", "fileSha")
@@ -45,6 +47,7 @@ class StreamingSpec extends SparkTestBase {
       .select(key.map(col): _*).collect().map(_.toSeq).toSet
 
     assert(streamed == batch)
+    assert(spark.read.parquet(outDir).count() == streamed.size, "a re-delivered file's triples landed twice")
 
     // third drain with nothing new: no additional rows
     IncrementalIngest.run(spark, corpusDir, outDir, ckpt)
