@@ -9,8 +9,6 @@ import org.apache.spark.sql.functions._
   */
 object Combine {
 
-  private val idCols = Seq("subj", "pred", "obj", "repo", "path", "commit", "fileSha")
-
   /** k-of-n vote: keep triples present in at least `k` of the given
     * extractor outputs (per-system multiplicity ignored — a system votes
     * once), score = max across agreeing systems. One shuffle on the
@@ -23,10 +21,10 @@ object Combine {
     import spark.implicits._
     runs.zipWithIndex
       .map { case (r, i) =>
-        r.toDF().select((idCols.map(col) :+ col("score") :+ lit(i).as("sys")): _*)
+        r.toDF().select((Extract.TripleKey.map(col) :+ col("score") :+ lit(i).as("sys")): _*)
       }
       .reduce(_ unionAll _)
-      .groupBy(idCols.map(col): _*)
+      .groupBy(Extract.TripleKey.map(col): _*)
       .agg(countDistinct($"sys").as("votes"), max($"score").as("score"))
       .filter($"votes" >= k)
       .drop("votes")

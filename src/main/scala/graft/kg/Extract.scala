@@ -193,9 +193,8 @@ object Extract {
 
   /** Canonical triples, each 7-tuple once with its max score: `triples`
     * then `dedup` at the default bucket count, `bucket` dropped. This is
-    * the one canonicalization path: SparkEntry.entry, the oracled
-    * `kg_triples_counts` key and the streaming sink run the exchange
-    * KgPipeline writes through.
+    * the one canonicalization path: SparkEntry.entry and the oracled
+    * `kg_triples_counts` key run the exchange KgPipeline writes through.
     */
   def canonicalTriples(ds: Dataset[HashedFile],
                        fnAliases: Broadcast[Set[String]],

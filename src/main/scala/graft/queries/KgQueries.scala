@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.kg.{Canonicalize, Extract, HashedFile, JsonIngest, KgPipeline, TableIO}
+import graft.kg.{Canonicalize, Extract, JsonIngest, KgPipeline, TableIO}
 import Tables.{corpus, t}
 
 /** KG-pipeline operator demonstrations (SURVEY §2.8 typed ops + S2).
@@ -54,13 +54,15 @@ object KgQueries {
     * threshold sigmoid(4 − 0.1·d) ≥ 0.5 ⇔ d ≤ 40 — some calls are
     * DROPPED by stage 3, putting the score gate itself under the oracle.
     * Docs share repos (doc_id % 50) so per-repo counts aggregate
-    * multiple docs.
+    * multiple docs. The rows enter through `TableIO.hashedFiles`, the
+    * input guards and content hash of every corpus scan; each generated row
+    * passes the guards (repo, path and lang are never null, content is
+    * a short text starting with `import `), so the oracles see them all.
     */
   private def docCodeCorpus(s: org.apache.spark.sql.SparkSession, d: String) = {
-    import s.implicits._
     val s1 = sanitizeWord(element_at(split(col("text"), " "), 1))
     val sn = sanitizeWord(element_at(split(col("text"), " "), -1))
-    t(s, d, "documents").select(
+    val docs = t(s, d, "documents").select(
       concat(lit("r"), lpad((col("doc_id") % 50).cast("string"), 3, "0")).as("repo"),
       concat(lit("doc/"), col("doc_id")).as("path"),
       col("source").as("commit"),
@@ -69,8 +71,7 @@ object KgQueries {
         lit("\n\ndef "), s1, lit("(a, b):\n    pass\n"),
         expr("repeat('# p\\n', cast(n_chars % 45 as int))"),
         lit("y = "), s1, lit("(1)\nz = "), sn, lit("(2)\n")).as("content"))
-      .withColumn("file_sha", sha2(col("content"), 256))
-      .as[HashedFile]
+    TableIO.hashedFiles(docs)
   }
 
   /** Oracle for the mention-count keys: the scanner must find exactly

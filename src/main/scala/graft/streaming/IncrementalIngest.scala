@@ -1,25 +1,21 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
-import graft.kg._
 
 /** Structured Streaming stretch (SURVEY §2.9 — post-parity optional):
-  * incremental corpus ingest. The reference is strictly batch; the north
-  * rule asks for batch-with-resume, which the manifest covers. This module
-  * adds the streaming-native variant for continuously-arriving corpora:
+  * the streaming counterparts of batch keys over continuously arriving
+  * documents and events — first-seen-wins exact dedup with custom state,
+  * watermarked session windows and tumbling-window counts, each drained
+  * with `Trigger.AvailableNow`.
   *
-  *   readStream(parquet dir) → Trigger.AvailableNow (drain backlog, stop)
-  *   → foreachBatch: fused extract+canonicalize → anti-join against the
-  *     7-tuples earlier batches wrote → triples written to a batch-keyed
-  *     partition (overwrite ⇒ idempotent under batch replay, the
-  *     standard exactly-once foreachBatch pattern).
-  *
-  * Spark's streaming checkpoint tracks which input files were consumed,
-  * so a rerun processes only newly arrived corpus files — the streaming
-  * analogue of the manifest's bucket resume.
+  * KG triples have one sink, `KgPipeline.run`, which owns the write, the
+  * triple dedup and the lineage manifest. A grown corpus is rebuilt by
+  * `KgPipeline.run` under a new `runId`; bucket-grained incremental
+  * recompute waits for a per-bucket input fingerprint in the manifest
+  * (ROADMAP item 4, "Resume safety").
   */
 object IncrementalIngest {
 
@@ -31,40 +27,6 @@ object IncrementalIngest {
     StructField("event_type", StringType),
     StructField("value", DoubleType),
     StructField("props", StringType)))
-
-  def run(spark: SparkSession, corpusDir: String, outDir: String,
-          checkpointDir: String): Unit = {
-    val dict = KgPipeline.dictDataset(spark)
-    val (fnAliases, canonB) = KgPipeline.broadcastDictionary(spark, dict)
-    val out = new org.apache.hadoop.fs.Path(outDir)
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    val stream = spark.readStream
-      .schema(TableIO.corpusSchema)
-      .option("maxFilesPerTrigger", 4)
-      .parquet(corpusDir)
-
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val triples = Extract.canonicalTriples(TableIO.hashedFiles(batch), fnAliases, canonB)
-        // a file re-delivered in a later arrival yields 7-tuples an
-        // earlier batch already wrote: drop them. Only batches before
-        // this one count, so a replayed batch rewrites the same rows
-        val fresh =
-          if (!fs.exists(out)) triples.toDF()
-          else triples.join(
-              spark.read.schema(triples.schema.add("batch", LongType)).parquet(outDir)
-                .filter(col("batch") < batchId),
-              Extract.TripleKey, "left_anti")
-            .select(triples.columns.toSeq.map(col): _*)
-        fresh.write.mode("overwrite").options(TableIO.LocalSinkOptions)
-          .parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
-    q.awaitTermination()
-  }
 
   /** Streaming exact dedup with CUSTOM STATE (SURVEY §2.9 surface:
     * `KeyValueGroupedDataset.flatMapGroupsWithState`): documents arrive

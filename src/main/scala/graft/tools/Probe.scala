@@ -2,6 +2,8 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
+import scala.collection.mutable
+import scala.util.matching.Regex
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -104,7 +106,7 @@ object Probe {
     "join_bloom_prune" -> "Build-side bloom as a SCALAR SUBQUERY (round 3 — no driver-collected binary literal in the plan) probing ahead of the exact broadcast semi-join — the exact shape of Spark's own injected runtime bloom filter.",
     "dedup_embed_cosine" -> "Round 3: self-join EQUI-KEY is the deterministic IVF cluster id (broadcast 8-centroid assignment + row_number argmax) — sub-quadratic; exact cosine verify inside the join.",
     "sink_partition_prune" -> "Read-back of a partitionBy(lang) sink with a partition-column filter: PartitionFilters prune the scan to the single lang=en directory before IO.",
-    "kg_triples_counts" -> "The full oracled DAG through the shipped Extract.canonicalTriples — one narrow MapPartitions (scan + relation pass + canonicalize fused against a broadcast link map, per-file max score, content dies inside; no join), then Extract.dedup: KgPipeline's one exchange, hash-partitioned on (bucket expression, pred) with only the Triple fields as input, one sort, WindowGroupLimit + row_number keeping the max-score row per 7-tuple; then the count aggregate.",
+    "kg_triples_counts" -> "The full oracled DAG: the corpus through TableIO.hashedFiles (the input guard Filter, then the sha256 projection), then the shipped Extract.canonicalTriples — one narrow MapPartitions (scan + relation pass + canonicalize fused against a broadcast link map, per-file max score, content dies inside; no join), then Extract.dedup: KgPipeline's one exchange, hash-partitioned on (bucket expression, pred) with only the Triple fields as input, one sort, WindowGroupLimit + row_number keeping the max-score row per 7-tuple; then the count aggregate.",
     "sample_stratified" -> "Round 5: stratified sampling is a pure per-row predicate (stratum CASE → hex threshold) — the whole plan is one scan with the filter applied in a single WholeStageCodegen span, no Exchange.",
     "decontam_ngram" -> "Round 5: 3-gram decontamination — eval-slice grams distinct then BROADCAST into the semi-match; the training side is a narrow scan+explode; the per-doc countDistinct is the only data-proportional shuffle (partial_count map-side).",
     "text_repetition" -> "Round 6: repetition gate is a typed per-partition HashMap count — O(len) per row (the round-5 nested-HOF form was O(distinct×len) per row, a straggler hazard on high-vocabulary docs), still scan→mapPartitions only, zero Exchange at any corpus size.",
@@ -123,8 +125,28 @@ object Probe {
     "kg_cooccur_pmi_cap" -> "Round 6: the production per-doc term cap — row_number<=16 over (tf desc, word) rides Catalyst's WindowGroupLimit partitioned on HIGH-CARDINALITY doc_id (Partial group-limit below the exchange), bounding pair-gen at O(n*16^2) regardless of per-doc vocabulary."
   )
 
-  /** `explain(formatted)` of the flagship DAG and every `planSections`
-    * key over `sfDir`, as the markdown of docs/PLANS.md.
+  /** `explain(formatted)` of `df` with what differs between two builds
+    * of one plan masked, so a regenerated docs/PLANS.md differs only
+    * where a plan did: expression ids (`#n`, an `L` suffix kept),
+    * `plan_id=n` and RDD ids are renumbered in first-seen order, lambda
+    * class names lose their sequence number and address, identity
+    * hashes (`@hex`) are dropped and UUIDs (observation names) read
+    * `<uuid>`.
+    */
+  def planText(df: DataFrame): String = {
+    def renumbered(s: String, re: Regex): String = {
+      val ids = mutable.HashMap.empty[String, Int]
+      re.replaceAllIn(s, m => Regex.quoteReplacement(m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size)))
+    }
+    val masked = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      .replaceAll("\\$Lambda(\\$\\d+)?/0x[0-9a-f]+", "\\$Lambda")
+      .replaceAll("(?<=[\\w$])@[0-9a-f]{1,8}\\b", "")
+      .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "<uuid>")
+    Seq("(#)(\\d+)".r, "(plan_id=)(\\d+)".r, "(RDD\\[)(\\d+)".r).foldLeft(masked)(renumbered)
+  }
+
+  /** `planText` of the flagship DAG and every `planSections` key over
+    * `sfDir`, as the markdown of docs/PLANS.md.
     */
   def explain(spark: SparkSession, sfDir: String): String = {
     import spark.implicits._
@@ -138,7 +160,7 @@ object Probe {
       sb.append(s"\n## $title\n\n$note\n\n```\n")
       // large literals (e.g. a bloom-filter binary) render as hex blobs —
       // cap each plan at 20k chars to keep the doc reviewable
-      val s = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      val s = planText(df)
       sb.append(if (s.length <= 20000) s
         else s.take(20000) + s"\n... [truncated ${s.length - 20000} chars]\n")
       sb.append("```\n")

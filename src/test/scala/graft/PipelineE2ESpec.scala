@@ -21,8 +21,6 @@ class PipelineE2ESpec extends SparkTestBase {
     CorpusGen.corpus(n).toDF()
   }
 
-  private def tripleKey = Seq("subj", "pred", "obj", "repo", "path", "commit", "fileSha")
-
   private def runPipeline(n: Int, dir: String,
                           onlyBuckets: Option[Set[Int]] = None): KgResult = {
     val cfg = KgConfig(s"$dir/triples", s"$dir/manifest", runId = "r1")
@@ -49,9 +47,27 @@ class PipelineE2ESpec extends SparkTestBase {
 
   private def readTriples(dir: String): Set[Seq[String]] = {
     spark.read.parquet(s"$dir/triples")
-      .select(tripleKey.map(col): _*).collect()
+      .select(Extract.TripleKey.map(col): _*).collect()
       .map(_.toSeq.map(String.valueOf)).toSet
   }
+
+  /** Triples keyed by 7-tuple with their score; fails on a duplicate 7-tuple. */
+  private def keyed(rows: Seq[Triple]): Map[Seq[String], Double] = {
+    val m = rows.map(t => Seq(t.subj, t.pred, t.obj, t.repo, t.path, t.commit, t.fileSha) -> t.score).toMap
+    assert(m.size == rows.size, s"${rows.size - m.size} duplicate 7-tuples")
+    m
+  }
+
+  private def writtenScored(dir: String): Map[Seq[String], Double] = {
+    import spark.implicits._
+    keyed(spark.read.parquet(s"$dir/triples").select((Extract.TripleKey :+ "score").map(col): _*)
+      .as[Triple].collect().toSeq)
+  }
+
+  private def scoredOracle(corpus: Seq[CodeFile]): Map[Seq[String], Double] =
+    Oracle.scoredTriples(corpus, Vocab.dictRows).map { case (t, sc) =>
+      Seq(t.subj, t.pred, t.obj, t.repo, t.path, t.commit, t.fileSha) -> sc
+    }
 
   test("e2e golden P/R == 1.0 on the tiny corpus") {
     val dir = tmp("kg-e2e")
@@ -76,9 +92,7 @@ class PipelineE2ESpec extends SparkTestBase {
     val corpus = spark.range(n)
       .mapPartitions(_.map(i => CorpusGen.genFile(i.toInt, n))).toDF()
     val dict = KgPipeline.dictDataset(spark)
-    val hashed = TableIO.withInvariants(corpus, 1)
-      .select("repo", "path", "commit", "lang", "content", "file_sha")
-      .as[HashedFile]
+    val hashed = TableIO.hashedFiles(corpus)
     val got = Extract.canonicalTriples(hashed,
         Extract.broadcastFnAliases(spark, dict),
         Canonicalize.broadcastLinkMap(spark, dict))
@@ -124,17 +138,9 @@ class PipelineE2ESpec extends SparkTestBase {
       .collect { case t if t.subj == "alphafn" && t.pred == "calls" => t.obj -> t.score }.toMap
     assert(edgeScores == Map("bravofn" -> logistic(1), "charliefn" -> logistic(5)), s"$edgeScores")
 
-    def keyed(rows: Seq[Triple]): Map[Seq[String], Double] = {
-      val m = rows.map(t => Seq(t.subj, t.pred, t.obj, t.repo, t.path, t.commit, t.fileSha) -> t.score).toMap
-      assert(m.size == rows.size, s"${rows.size - m.size} duplicate 7-tuples")
-      m
-    }
-    val want = Oracle.scoredTriples(corpus, Vocab.dictRows).map { case (t, sc) =>
-      Seq(t.subj, t.pred, t.obj, t.repo, t.path, t.commit, t.fileSha) -> sc
-    }
+    val want = scoredOracle(corpus)
 
-    val hashed = TableIO.withInvariants(corpus.toDF(), 1)
-      .select("repo", "path", "commit", "lang", "content", "file_sha").as[HashedFile]
+    val hashed = TableIO.hashedFiles(corpus.toDF())
     val viaCanonical = keyed(Extract.canonicalTriples(hashed, fnAliases, canonB).collect().toSeq)
     assert(viaCanonical == want,
       s"canonicalTriples: spurious=${(viaCanonical.toSet -- want).take(3)} " +
@@ -142,8 +148,7 @@ class PipelineE2ESpec extends SparkTestBase {
 
     val dir = tmp("kg-dup")
     val res = KgPipeline.run(spark, corpus.toDF(), dict, KgConfig(s"$dir/triples", s"$dir/manifest", "r1"))
-    val viaRun = keyed(spark.read.parquet(s"$dir/triples").select("subj", "pred", "obj", "repo", "path",
-      "commit", "fileSha", "score").as[Triple].collect().toSeq)
+    val viaRun = writtenScored(dir)
     assert(viaRun == want,
       s"KgPipeline.run: spurious=${(viaRun.toSet -- want).take(3)} missed=${(want.toSet -- viaRun).take(3)}")
     assert(res.triplesWritten == want.size)
@@ -159,6 +164,28 @@ class PipelineE2ESpec extends SparkTestBase {
       assert(ts.size == copies((k._4, k._5, k._6, k._7)), s"$k emitted ${ts.size} times")
     }
     assert(emitted.values.map(_.size).sum > want.size, "fixture has no cross-row duplicates")
+  }
+
+  test("a grown corpus rerun under a new runId equals the scored oracle of the union") {
+    import spark.implicits._
+    val all = CorpusGen.corpus(60)
+    val grown = all ++ all.take(5) // every file, five of them re-delivered
+    val dir = tmp("kg-grown")
+    val dict = KgPipeline.dictDataset(spark)
+    def run(files: Seq[CodeFile], runId: String) =
+      KgPipeline.run(spark, files.toDF(), dict, KgConfig(s"$dir/triples", s"$dir/manifest", runId))
+    assert(run(all.take(30), "r1").triplesWritten > 0)
+    // r1's manifest commits nothing for r2: r2 rebuilds every bucket, and
+    // the dynamic overwrite replaces each (bucket, pred) directory r1 wrote
+    val res = run(grown, "r2")
+    assert(res.bucketsCommitted == 16)
+    val want = scoredOracle(grown)
+    val got = writtenScored(dir)
+    assert(got == want,
+      s"spurious=${(got.toSet -- want).take(3)} missed=${(want.toSet -- got).take(3)}")
+    assert(res.triplesWritten == want.size)
+    val differ = graft.tools.Probe.lineage(spark, dir, "r2")
+    assert(differ.isEmpty, s"r2's manifest and the disk differ in buckets $differ")
   }
 
   test("per-row sha256 invariant holds for 100% of corpus rows") {
@@ -199,7 +226,7 @@ class PipelineE2ESpec extends SparkTestBase {
     // the xor digest is sound only while written rows are distinct: no
     // 7-tuple lands twice, and each bucket's rowCount is its distinct count
     for (d <- Seq(d1, d2)) {
-      val rows = spark.read.parquet(s"$d/triples").select((tripleKey :+ "bucket").map(col): _*)
+      val rows = spark.read.parquet(s"$d/triples").select((Extract.TripleKey :+ "bucket").map(col): _*)
       assert(rows.count() == rows.distinct().count(), s"duplicate triples in $d")
       val distinctPerBucket = rows.distinct().groupBy("bucket").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap

@@ -24,9 +24,7 @@ class PlanSpec extends SparkTestBase {
     import spark.implicits._
     val corpus = graft.fixtures.CorpusGen.corpus(60).toDF()
     val dict = graft.kg.KgPipeline.dictDataset(spark)
-    val hashed = graft.kg.TableIO.withInvariants(corpus, 1)
-      .select("repo", "path", "commit", "lang", "content", "file_sha")
-      .as[graft.kg.HashedFile]
+    val hashed = graft.kg.TableIO.hashedFiles(corpus)
     val triples = graft.kg.Extract.canonicalTriples(hashed,
       graft.kg.Extract.broadcastFnAliases(spark, dict),
       graft.kg.Canonicalize.broadcastLinkMap(spark, dict))

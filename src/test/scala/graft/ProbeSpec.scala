@@ -2,16 +2,32 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions.col
+import graft.fixtures.CorpusGen
+import graft.kg.{KgPipeline, TableIO}
 import graft.tools.Probe
 
-/** The probe's explain sections name real keys, and its listener's
-  * totals are complete the moment `measured` returns.
+/** The probe's explain sections name real keys and render the same
+  * plan as the same text, and its listener's totals are complete the
+  * moment `measured` returns.
   */
 class ProbeSpec extends SparkTestBase {
 
   test("every explain section names a SparkEntry key") {
     val unknown = Probe.planSections.map(_._1).filterNot(SparkEntry.queries.contains)
     assert(unknown.isEmpty, s"not in SparkEntry.queries: $unknown")
+  }
+
+  test("explain text of two separately built KG write plans is identical") {
+    import spark.implicits._
+    val (fnAliases, canonB) = KgPipeline.broadcastDictionary(spark, KgPipeline.dictDataset(spark))
+    // each build mints fresh expression ids, plan ids, lambda and
+    // observation names: the masked text must not show them
+    def plan() = Probe.planText(KgPipeline.writeInput(CorpusGen.corpus(20).toDF(),
+      (0 until TableIO.DefaultBuckets).toSet, TableIO.DefaultBuckets, fnAliases, canonB).triples)
+    val (a, b) = (plan(), plan())
+    assert(a.contains("CollectMetrics") && a.contains("$Lambda"), a)
+    val firstDiff = a.linesIterator.zip(b.linesIterator).find { case (x, y) => x != y }
+    assert(a == b, s"first differing line: $firstDiff")
   }
 
   test("listener totals are complete when measured returns, with no sleep") {

@@ -2,57 +2,15 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.kg._
-import graft.fixtures.CorpusGen
 import graft.streaming.IncrementalIngest
 
-/** Structured Streaming stretch tests (SURVEY §2.9): incremental ingest
-  * equals the batch pipeline; checkpoint resume processes only new files;
-  * watermarked windowed agg equals its batch equivalent (below watermark).
+/** Structured Streaming stretch tests (SURVEY §2.9): stateful dedup
+  * keeps its decisions across checkpointed drains; session and tumbling
+  * windows equal their batch equivalents (below the watermark).
   */
 class StreamingSpec extends SparkTestBase {
 
   private def tmp(p: String): String = Files.createTempDirectory(p).toString
-
-  test("incremental ingest: two arrivals ≡ one batch run; resume skips old files") {
-    import spark.implicits._
-    val corpusDir = tmp("stream-corpus")
-    val outDir = tmp("stream-out")
-    val ckpt = tmp("stream-ckpt")
-    val all = CorpusGen.corpus(60)
-
-    // arrival 1
-    all.take(30).toDF().write.mode("append").parquet(corpusDir)
-    IncrementalIngest.run(spark, corpusDir, outDir, ckpt)
-    val afterFirst = spark.read.parquet(outDir).count()
-    assert(afterFirst > 0)
-
-    // arrival 2 → only the new files are processed (checkpoint resume);
-    // it re-delivers five arrival-1 files in a new parquet file, whose
-    // triples were written by arrival 1 already
-    (all.drop(30) ++ all.take(5)).toDF().write.mode("append").parquet(corpusDir)
-    IncrementalIngest.run(spark, corpusDir, outDir, ckpt)
-
-    val key = Seq("subj", "pred", "obj", "repo", "path", "commit", "fileSha")
-    val streamed = spark.read.parquet(outDir)
-      .select(key.map(col): _*).collect().map(_.toSeq).toSet
-
-    val dict = KgPipeline.dictDataset(spark)
-    val hashed = TableIO.withInvariants(all.toDF(), 1)
-      .select("repo", "path", "commit", "lang", "content", "file_sha")
-      .as[HashedFile]
-    val batch = Extract.canonicalTriples(hashed,
-        Extract.broadcastFnAliases(spark, dict),
-        Canonicalize.broadcastLinkMap(spark, dict))
-      .select(key.map(col): _*).collect().map(_.toSeq).toSet
-
-    assert(streamed == batch)
-    assert(spark.read.parquet(outDir).count() == streamed.size, "a re-delivered file's triples landed twice")
-
-    // third drain with nothing new: no additional rows
-    IncrementalIngest.run(spark, corpusDir, outDir, ckpt)
-    assert(spark.read.parquet(outDir).count() == streamed.size)
-  }
 
   test("streaming exact dedup: custom state keeps first-seen sha across batches") {
     import spark.implicits._
