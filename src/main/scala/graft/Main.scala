@@ -31,15 +31,10 @@ object Main {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
     val corpus = opts.get("--corpus") match {
       case Some(dir) => spark.read.schema(TableIO.corpusSchema).parquet(dir)
-      case None =>
-        val n = opts.getOrElse("--nfiles", "60").toInt
-        // distributed deterministic generation: file i is a pure function of i
-        spark.range(n).mapPartitions(_.map(i =>
-          fixtures.CorpusGen.genFile(i.toInt, n))).toDF()
+      case None => fixtures.CorpusGen.frame(spark, opts.getOrElse("--nfiles", "60").toInt)
     }
 
     val cfg = KgConfig(s"$out/triples", s"$out/manifest", runId, nBuckets)

@@ -1,6 +1,7 @@
 package graft.fixtures
 
 import scala.util.Random
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.kg.CodeFile
 
 /** Deterministic synthetic source-code corpus (FIXTURES.md §1).
@@ -99,6 +100,14 @@ object CorpusGen {
   /** The whole corpus as a deterministic in-memory sequence (tiny/small). */
   def corpus(nFiles: Int): Seq[CodeFile] =
     (0 until nFiles).map(genFile(_, nFiles))
+
+  /** The same corpus generated on the executors, one `genFile` per id of
+    * `spark.range`: equal to `corpus(nFiles)` under any partitioning.
+    */
+  def frame(spark: SparkSession, nFiles: Int): DataFrame = {
+    import spark.implicits._
+    spark.range(nFiles).mapPartitions(_.map(i => genFile(i.toInt, nFiles))).toDF()
+  }
 
   /** Standard sizes (FIXTURES.md §1). */
   val TinyFiles = 60

@@ -16,18 +16,9 @@ object Hashing {
     z ^ (z >>> 31)
   }
 
-  /** FNV-1a 64-bit over UTF-8 bytes, then mixed. */
-  def hashString(s: String, seed: Long = 0L): Long = {
-    var h = 0xcbf29ce484222325L ^ seed
-    var i = 0
-    val bytes = s.getBytes("UTF-8")
-    while (i < bytes.length) {
-      h ^= (bytes(i) & 0xffL)
-      h *= 0x100000001b3L
-      i += 1
-    }
-    mix64(h)
-  }
+  /** FNV-1a 64-bit over UTF-8 bytes (`Fingerprint64.fnv`), then mixed. */
+  def hashString(s: String): Long =
+    mix64(Fingerprint64.fnv(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
 
   /** Character k-shingles of a string (SPEC: 3-grams for alias LSH). */
   def shingles(s: String, k: Int): Seq[String] =

@@ -1,35 +1,37 @@
 package graft.kg
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
-/** Multi-system triple combiners (SURVEY O3/O4: the reference merges the
+/** Multi-system combiners (SURVEY O3/O4: the reference merges the
   * outputs of several extraction systems over the same corpus — union,
-  * intersection, and k-of-n voting on the triple identity key).
+  * intersection, and k-of-n voting on an identity key).
   */
 object Combine {
 
-  /** k-of-n vote: keep triples present in at least `k` of the given
-    * extractor outputs (per-system multiplicity ignored — a system votes
-    * once), score = max across agreeing systems. One shuffle on the
-    * identity key; system tags ride along as a tiny int column.
+  /** k-of-n vote: keep the `key` values present in at least `k` of the
+    * runs (per-run multiplicity ignored — a run votes once per key).
+    * Every other column of the first run is max-aggregated across the
+    * agreeing runs, and `votes` counts them. One shuffle on the key; run
+    * tags ride along as a tiny int column.
     */
-  def vote(runs: Seq[Dataset[Triple]], k: Int): Dataset[Triple] = {
+  def vote(runs: Seq[DataFrame], key: Seq[String], k: Int): DataFrame = {
     require(runs.nonEmpty && k >= 1 && k <= runs.size,
       s"vote: need 1 <= k <= ${runs.size}, got $k")
-    val spark = runs.head.sparkSession
-    import spark.implicits._
+    val columns = runs.head.columns.toSeq
+    val aggs = columns.filterNot(key.contains).map(c => max(col(c)).as(c)) :+
+      countDistinct(col("__run")).as("votes")
     runs.zipWithIndex
-      .map { case (r, i) =>
-        r.toDF().select((Extract.TripleKey.map(col) :+ col("score") :+ lit(i).as("sys")): _*)
-      }
+      .map { case (r, i) => r.select((columns.map(col) :+ lit(i).as("__run")): _*) }
       .reduce(_ unionAll _)
-      .groupBy(Extract.TripleKey.map(col): _*)
-      .agg(countDistinct($"sys").as("votes"), max($"score").as("score"))
-      .filter($"votes" >= k)
-      .drop("votes")
-      .as[Triple]
+      .groupBy(key.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+      .filter(col("votes") >= k)
   }
+
+  /** `vote` on the triple identity key; score = max across agreeing runs. */
+  def vote(runs: Seq[Dataset[Triple]], k: Int): Dataset[Triple] =
+    vote(runs.map(_.toDF()), Extract.TripleKey, k).drop("votes").as(Encoders.product[Triple])
 
   /** Union of extractor outputs (1-of-n vote). */
   def union(runs: Seq[Dataset[Triple]]): Dataset[Triple] = vote(runs, 1)

@@ -103,8 +103,9 @@ object KgPipeline {
           cfg: KgConfig, onlyBuckets: Option[Set[Int]] = None): KgResult = {
     val t0 = System.currentTimeMillis()
 
-    // resume: skip committed buckets (SURVEY S5/J4)
-    val doneSet = Manifest.committed(spark, cfg.manifestDir, cfg.runId).keySet
+    // resume: skip committed buckets (SURVEY S5/J4), at the count they
+    // were routed with
+    val doneSet = Manifest.resumable(spark, cfg.manifestDir, cfg.runId, cfg.nBuckets)
     val allTodo = (0 until cfg.nBuckets).filterNot(doneSet).toSet
     val todoBuckets = onlyBuckets.map(_ intersect allTodo).getOrElse(allTodo)
     if (todoBuckets.isEmpty)

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.functions.XorDigest
 
 /** Per-partition lineage + checkpointed resumability (BASELINE.json:6,14;
   * SURVEY S5/A7). The manifest is an append-only parquet table of
@@ -25,12 +24,15 @@ import graft.functions.XorDigest
   */
 object Manifest {
 
-  /** A manifest row: a bucket of run `runId` committed with this lineage;
-    * `startedAt` is when that run began. Built field by field: `fromDDL`
-    * would run the SQL parser, whose DFA cache stays on the driver heap.
+  /** A manifest row: a bucket of run `runId`, routed among `nBuckets`,
+    * committed with this lineage; `startedAt` is when that run began.
+    * Columns: runId, bucket, nBuckets, rowCount, contentDigest,
+    * startedAt. Rows written before `nBuckets` was recorded read it as
+    * null. Built field by field: `fromDDL` would run the SQL parser,
+    * whose DFA cache stays on the driver heap.
     */
   val Schema: StructType = new StructType()
-    .add("runId", StringType).add("bucket", IntegerType)
+    .add("runId", StringType).add("bucket", IntegerType).add("nBuckets", IntegerType)
     .add("rowCount", LongType).add("contentDigest", LongType)
     .add("startedAt", TimestampType)
 
@@ -44,7 +46,7 @@ object Manifest {
     triples
       .withColumn("rowHash", rowHash)
       .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("rowCount"), XorDigest(col("rowHash")).as("contentDigest"))
+      .agg(count(lit(1)).as("rowCount"), bit_xor(col("rowHash")).as("contentDigest"))
 
   /** Every bucket's (rowCount, contentDigest) in one buffer: slot b
     * counts bucket b's rows, slot nBuckets + b xors their hashes. One
@@ -90,7 +92,7 @@ object Manifest {
     // an Instant, not a java.sql.Timestamp: converting the latter loads
     // Spark's Julian-calendar rebase tables (≈0.5 MB kept for good)
     val startedAt = java.time.Instant.ofEpochMilli(startedAtMs)
-    spark.createDataFrame(rows.map { case (b, n, d) => Row(runId, b, n, d, startedAt) }.asJava, Schema)
+    spark.createDataFrame(rows.map { case (b, n, d) => Row(runId, b, nBuckets, n, d, startedAt) }.asJava, Schema)
       .coalesce(1)
       .write.mode("append").options(TableIO.LocalSinkOptions).parquet(manifestDir)
     rows
@@ -112,10 +114,30 @@ object Manifest {
     * host).
     */
   def committed(spark: SparkSession, manifestDir: String, runId: String): Map[Int, (Long, Long)] =
-    if (!exists(spark, manifestDir)) Map.empty
+    committedRows(spark, manifestDir, runId).map { case (b, _, n, d) => b -> (n, d) }.toMap
+
+  /** The buckets of `runId` a resume at `nBuckets` skips. A file's
+    * bucket depends on the bucket count, so a resume at another count
+    * would route files of committed buckets to uncommitted ones and
+    * write their triples a second time: it is refused when any committed
+    * row records another count (a row without one is taken as valid).
+    */
+  def resumable(spark: SparkSession, manifestDir: String, runId: String, nBuckets: Int): Set[Int] = {
+    val rows = committedRows(spark, manifestDir, runId)
+    val others = rows.flatMap(_._2).filter(_ != nBuckets).distinct.sorted
+    require(others.isEmpty, s"run '$runId' committed buckets under $manifestDir at " +
+      s"${others.mkString(", ")} buckets; this run routes to $nBuckets: resume it at that count, " +
+      "or build into an empty output dir")
+    rows.map(_._1).toSet
+  }
+
+  /** (bucket, nBuckets, rowCount, contentDigest) of each committed row of `runId`. */
+  private def committedRows(spark: SparkSession, manifestDir: String,
+                            runId: String): Seq[(Int, Option[Int], Long, Long)] =
+    if (!exists(spark, manifestDir)) Nil
     else read(spark, manifestDir).filter(col("runId") === runId)
-      .select("bucket", "rowCount", "contentDigest").collect()
-      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+      .select("bucket", "nBuckets", "rowCount", "contentDigest").collect().toSeq
+      .map(r => (r.getInt(0), Option(r.getAs[Integer](1)).map(_.toInt), r.getLong(2), r.getLong(3)))
 
   // Hadoop FileSystem, not java.io.File: the manifest dir may live on
   // any supported filesystem (HDFS/S3A/local) in production

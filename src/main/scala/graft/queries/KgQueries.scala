@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.kg.{Canonicalize, Extract, JsonIngest, KgPipeline, TableIO}
+import graft.kg.{Canonicalize, Combine, Extract, JsonIngest, KgPipeline, TableIO}
 import Tables.{corpus, t}
 
 /** KG-pipeline operator demonstrations (SURVEY §2.8 typed ops + S2).
@@ -238,15 +238,12 @@ object KgQueries {
       (s, d) => {
         val docs = t(s, d, "documents")
         def sys(obj: org.apache.spark.sql.Column) =
-          docs.select(col("source").as("subj"), lit("mentions").as("pred"),
-            obj.as("obj")).distinct()
+          docs.select(col("source").as("subj"), lit("mentions").as("pred"), obj.as("obj"))
         val e1 = sys(element_at(split(col("text"), " "), 1))
         val e2 = sys(element_at(split(col("text"), " "), -1))
         val e3 = sys(element_at(array_sort(array_distinct(split(col("text"), " "))), 1))
-        e1.unionAll(e2).unionAll(e3)
-          .groupBy("subj", "pred", "obj")
-          .agg(count(lit(1)).as("n_votes"))
-          .filter(col("n_votes") >= 2)
+        Combine.vote(Seq(e1, e2, e3), Seq("subj", "pred", "obj"), 2)
+          .withColumnRenamed("votes", "n_votes")
       }),
 
     // T1: broadcast-dictionary mention scanner (typed flatMap UDTF-style)

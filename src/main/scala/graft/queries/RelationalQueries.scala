@@ -1,8 +1,8 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.functions.{SpaceSaving, XorDigest}
-import graft.kg.TableIO
+import graft.functions.SpaceSaving
+import graft.kg.{Combine, TableIO}
 import Tables.t
 
 /** SURVEY §2.1–§2.6 operator demonstrations over the driver testdata,
@@ -259,14 +259,15 @@ object RelationalQueries {
         .select(coalesce(col("l_returnflag"), lit("ALL")).as("flag"),
           coalesce(col("l_linestatus"), lit("ALL")).as("status"), col("n"))),
 
-    // A7/T4: commutative lineage digest via the custom Aggregator UDAF;
-    // oracle uses DuckDB's bit_xor over the identical integer expression
+    // A7: commutative lineage digest, Spark's bit_xor (the aggregate
+    // Manifest.bucketStats runs); oracle uses DuckDB's bit_xor over the
+    // identical integer expression
     "agg_digest" -> Q.withOracle(
       """SELECT l_returnflag, bit_xor(l_orderkey * 2654435761 + l_linenumber) AS digest
         |FROM lineitem GROUP BY l_returnflag""".stripMargin)(
       (s, d) => t(s, d, "lineitem")
         .groupBy("l_returnflag")
-        .agg(XorDigest(col("l_orderkey") * lit(2654435761L) + col("l_linenumber")).as("digest"))),
+        .agg(bit_xor(col("l_orderkey") * lit(2654435761L) + col("l_linenumber")).as("digest"))),
 
     // Heavy hitters via the SpaceSaving sketch UDAF (round 6): term
     // frequencies from a capacity-64 summary. The 31-word synthetic
@@ -404,13 +405,9 @@ object RelationalQueries {
         |WHERE votes >= 2""".stripMargin)(
       (s, d) => {
         val li = t(s, d, "lineitem")
-        def sys(c: org.apache.spark.sql.Column) =
-          li.filter(c).select(col("l_orderkey").as("okey")).distinct()
-        sys(col("l_discount") > 0.05)
-          .unionAll(sys(col("l_quantity") > 30))
-          .unionAll(sys(col("l_returnflag") === "R"))
-          .groupBy("okey").agg(count(lit(1)).as("votes"))
-          .filter(col("votes") >= 2)
+        def sys(c: org.apache.spark.sql.Column) = li.filter(c).select(col("l_orderkey").as("okey"))
+        Combine.vote(Seq(sys(col("l_discount") > 0.05), sys(col("l_quantity") > 30),
+          sys(col("l_returnflag") === "R")), Seq("okey"), 2)
       }),
 
     // S4 read-back (round 3): write PARTITIONED BY a low-cardinality

@@ -69,11 +69,6 @@ object Tables {
   }
 
   /** Distributed deterministic corpus: file i is a pure function of i. */
-  def corpus(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val n = corpusFiles(sfDir)
-    spark.range(n)
-      .mapPartitions(_.map(i => graft.fixtures.CorpusGen.genFile(i.toInt, n)))
-      .toDF()
-  }
+  def corpus(spark: SparkSession, sfDir: String): DataFrame =
+    graft.fixtures.CorpusGen.frame(spark, corpusFiles(sfDir))
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -28,6 +28,20 @@ object IncrementalIngest {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
+  /** Appends `stream` to the parquet table at `outDir`, drained with
+    * `Trigger.AvailableNow`: processes every input present at start,
+    * then returns.
+    */
+  private def drain(stream: DataFrame, outDir: String, checkpointDir: String): Unit =
+    stream.writeStream
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpointDir)
+      .format("parquet")
+      .option("path", outDir)
+      .start()
+      .awaitTermination()
+
   /** Streaming exact dedup with CUSTOM STATE (SURVEY §2.9 surface:
     * `KeyValueGroupedDataset.flatMapGroupsWithState`): documents arrive
     * continuously; the first doc_id seen per content sha is emitted, every
@@ -43,7 +57,7 @@ object IncrementalIngest {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val schema = StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType)))
-    val q = spark.readStream.schema(schema).parquet(docsDir)
+    val stream = spark.readStream.schema(schema).parquet(docsDir)
       .select(sha2(col("text"), 256).as("sha"), col("doc_id"))
       .as[(String, Long)]
       .groupByKey(_._1)
@@ -56,14 +70,7 @@ object IncrementalIngest {
           }
       }
       .toDF("sha", "keep_id")
-      .writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .format("parquet")
-      .option("path", outDir)
-      .start()
-    q.awaitTermination()
+    drain(stream, outDir, checkpointDir)
   }
 
   /** Streaming SESSIONIZATION (round 6): the streaming-native
@@ -81,7 +88,7 @@ object IncrementalIngest {
     */
   def sessionWindows(spark: SparkSession, eventsDir: String, outDir: String,
                      checkpointDir: String, gap: String = "30 minutes"): Unit = {
-    val q = spark.readStream.schema(eventsSchema).parquet(eventsDir)
+    val stream = spark.readStream.schema(eventsSchema).parquet(eventsDir)
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"), session_window(col("ts"), gap))
       .agg(count(lit(1)).as("n_events"),
@@ -90,14 +97,7 @@ object IncrementalIngest {
         col("session_window.start").as("sess_start"),
         col("session_window.end").as("sess_end"),
         col("n_events"), col("value_micro"))
-      .writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .format("parquet")
-      .option("path", outDir)
-      .start()
-    q.awaitTermination()
+    drain(stream, outDir, checkpointDir)
   }
 
   /** Watermarked tumbling-window aggregation over an event stream
@@ -107,18 +107,11 @@ object IncrementalIngest {
     */
   def windowedEventCounts(spark: SparkSession, eventsDir: String,
                           outDir: String, checkpointDir: String): Unit = {
-    val q = spark.readStream.schema(eventsSchema).parquet(eventsDir)
+    val stream = spark.readStream.schema(eventsSchema).parquet(eventsDir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("win_start"), col("event_type"), col("n"))
-      .writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .format("parquet")
-      .option("path", outDir)
-      .start()
-    q.awaitTermination()
+    drain(stream, outDir, checkpointDir)
   }
 }

@@ -130,8 +130,8 @@ object Probe {
     * where a plan did: expression ids (`#n`, an `L` suffix kept),
     * `plan_id=n` and RDD ids are renumbered in first-seen order, lambda
     * class names lose their sequence number and address, identity
-    * hashes (`@hex`) are dropped and UUIDs (observation names) read
-    * `<uuid>`.
+    * hashes (`@hex`) and call-site line numbers (`at X.scala:n`) are
+    * dropped and UUIDs (observation names) read `<uuid>`.
     */
   def planText(df: DataFrame): String = {
     def renumbered(s: String, re: Regex): String = {
@@ -142,6 +142,7 @@ object Probe {
       .replaceAll("\\$Lambda(\\$\\d+)?/0x[0-9a-f]+", "\\$Lambda")
       .replaceAll("(?<=[\\w$])@[0-9a-f]{1,8}\\b", "")
       .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "<uuid>")
+      .replaceAll("(?<=\\.scala):\\d+", "")
     Seq("(#)(\\d+)".r, "(plan_id=)(\\d+)".r, "(RDD\\[)(\\d+)".r).foldLeft(masked)(renumbered)
   }
 

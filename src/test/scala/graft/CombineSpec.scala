@@ -1,7 +1,6 @@
 package graft
 
-import graft.kg.{Canonicalize, Combine, Extract, HashedFile, KgPipeline, Triple}
-import org.apache.spark.sql.functions._
+import graft.kg.{Combine, Extract, KgPipeline, TableIO, Triple}
 
 /** k-of-n vote combiner over ACTUAL extractor variant outputs (the
   * reference's multi-system merge, SURVEY O3/O4).
@@ -10,13 +9,9 @@ class CombineSpec extends SparkTestBase {
 
   private def triples(drop: Set[String]): org.apache.spark.sql.Dataset[Triple] = {
     import spark.implicits._
-    val corpus = fixtures.CorpusGen.corpus(200).toDF()
-      .withColumn("file_sha", sha2(col("content"), 256)).as[HashedFile]
-    val dict = KgPipeline.dictDataset(spark)
-    val full = Extract.canonicalTriples(corpus,
-      Extract.broadcastFnAliases(spark, dict),
-      Canonicalize.broadcastLinkMap(spark, dict))
-    full.filter(t => !drop.contains(t.pred))
+    val corpus = TableIO.hashedFiles(fixtures.CorpusGen.corpus(200).toDF())
+    val (fnAliases, canon) = KgPipeline.broadcastDictionary(spark, KgPipeline.dictDataset(spark))
+    Extract.canonicalTriples(corpus, fnAliases, canon).filter(t => !drop.contains(t.pred))
   }
 
   test("vote k-of-n over three extractor variants matches set algebra") {
@@ -50,5 +45,20 @@ class CombineSpec extends SparkTestBase {
     val r2 = Seq(t(0.9)).toDS()
     val got = Combine.vote(Seq(r1, r2), 2).collect().toList
     assert(got == List(t(0.9)))
+  }
+
+  test("DataFrame vote: a key subset of the columns, votes, max over the rest") {
+    import spark.implicits._
+    // three runs over (doc, word, weight, note); the key is (doc, word)
+    val r1 = Seq((1, "a", 0.2, "x"), (1, "a", 0.7, "y"), (2, "b", 0.5, "x")).toDF("doc", "word", "weight", "note")
+    val r2 = Seq((1, "a", 0.4, "z"), (3, "c", 0.1, "x")).toDF("doc", "word", "weight", "note")
+    val r3 = Seq((2, "b", 0.9, "w"), (3, "c", 0.3, "y"), (1, "a", 0.1, "x")).toDF("doc", "word", "weight", "note")
+    val got = Combine.vote(Seq(r1, r2, r3), Seq("doc", "word"), 2)
+    assert(got.columns.toSeq == Seq("doc", "word", "weight", "note", "votes"))
+    // (1, a) is in all three runs but twice in r1: r1 still votes once
+    assert(got.as[(Int, String, Double, String, Long)].collect().sortBy(_._1).toSeq == Seq(
+      (1, "a", 0.7, "z", 3L), (2, "b", 0.9, "x", 2L), (3, "c", 0.3, "y", 2L)))
+    assert(Combine.vote(Seq(r1, r2, r3), Seq("doc", "word"), 3).as[(Int, String, Double, String, Long)]
+      .collect().toSeq == Seq((1, "a", 0.7, "z", 3L)))
   }
 }

@@ -46,15 +46,11 @@ class EvalSpec extends SparkTestBase {
 
   test("engine output scores 1.0 against the oracle through clusters (tiny corpus)") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
+    import graft.kg.{Extract, KgPipeline, TableIO}
     val corpusLocal = fixtures.CorpusGen.corpus(fixtures.CorpusGen.TinyFiles)
     val gold = Oracle.triples(corpusLocal, Vocab.dictRows)
-    val corpus = corpusLocal.toDF()
-      .withColumn("file_sha", sha2(col("content"), 256)).as[graft.kg.HashedFile]
-    val dict = graft.kg.KgPipeline.dictDataset(spark)
-    val pred = graft.kg.Extract.canonicalTriples(corpus,
-        graft.kg.Extract.broadcastFnAliases(spark, dict),
-        graft.kg.Canonicalize.broadcastLinkMap(spark, dict))
+    val (fnAliases, canonB) = KgPipeline.broadcastDictionary(spark, KgPipeline.dictDataset(spark))
+    val pred = Extract.canonicalTriples(TableIO.hashedFiles(corpusLocal.toDF()), fnAliases, canonB)
       .collect().map(x => GTriple(x.subj, x.pred, x.obj, x.repo, x.path, x.commit, x.fileSha))
     val (p, r) = Eval.clusterPR(pred.toSeq, gold, canon)
     assert(p == 1.0 && r == 1.0)

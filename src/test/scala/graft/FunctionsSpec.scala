@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions._
+import graft.kg.{Extract, Manifest, Triple}
 import org.apache.spark.sql.functions.col
 
 /** Unit tests for the custom functions: native fingerprint expressions
-  * (eval + codegen paths agree), xor-digest commutativity, MinHash/
+  * (eval + codegen paths agree), the manifest's xor digest, MinHash/
   * SimHash properties (SURVEY §5.2 layers 1–2).
   */
 class FunctionsSpec extends SparkTestBase {
@@ -73,11 +74,20 @@ class FunctionsSpec extends SparkTestBase {
 
   test("xor digest: commutative, partitioning-invariant, matches fold") {
     import spark.implicits._
-    val xs = (1L to 1000L).map(i => Hashing.mix64(i))
-    val expected = xs.foldLeft(0L)(_ ^ _)
-    val r1 = xs.toDF("h").repartition(1).agg(XorDigest(col("h"))).first().getLong(0)
-    val r17 = xs.toDF("h").repartition(17).agg(XorDigest(col("h"))).first().getLong(0)
-    assert(r1 == expected && r17 == expected)
+    // Manifest.bucketStats' per-bucket (rowCount, contentDigest) against
+    // a driver-side count and xor-fold of the collected row hashes
+    val triples = (1 to 1000).map(i => Triple(s"s${i % 37}", s"p${i % 3}", s"o$i", "r", s"f${i % 11}",
+        "c", s"sha${i % 5}", 1.0)).toDF()
+      .withColumn("bucket", (col("obj").substr(2, 4).cast("int") % 7).cast("int"))
+    val expected = triples.select(col("bucket"), xxhash64(Extract.TripleKey.map(col): _*))
+      .as[(Int, Long)].collect().groupBy(_._1)
+      .map { case (b, hs) => b -> (hs.length.toLong, hs.map(_._2).foldLeft(0L)(_ ^ _)) }
+    assert(expected.size == 7)
+    for (n <- Seq(1, 17)) {
+      val got = Manifest.bucketStats(triples.repartition(n)).collect()
+        .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(got == expected, s"repartition($n)")
+    }
   }
 
   test("minhash: identical sets → identical sigs; similarity tracks jaccard") {

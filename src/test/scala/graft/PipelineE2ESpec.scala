@@ -87,10 +87,8 @@ class PipelineE2ESpec extends SparkTestBase {
   }
 
   test("golden P/R == 1.0 on the 3000-file small corpus (in-memory DAG)") {
-    import spark.implicits._
     val n = CorpusGen.SmallFiles
-    val corpus = spark.range(n)
-      .mapPartitions(_.map(i => CorpusGen.genFile(i.toInt, n))).toDF()
+    val corpus = CorpusGen.frame(spark, n)
     val dict = KgPipeline.dictDataset(spark)
     val hashed = TableIO.hashedFiles(corpus)
     val got = Extract.canonicalTriples(hashed,
@@ -327,6 +325,24 @@ class PipelineE2ESpec extends SparkTestBase {
       Manifest.Schema.fieldNames.toSeq, f.getName))
     // and a manifest holding both shapes resumes as a no-op
     val again = runPipeline(CorpusGen.TinyFiles, dir)
+    assert(again.triplesWritten == 0L && again.bucketsCommitted == 16)
+  }
+
+  test("a rerun under the same runId at another bucket count is refused") {
+    val dir = tmp("kg-rebucket")
+    val (corpus, dict) = (corpusDf(CorpusGen.TinyFiles), KgPipeline.dictDataset(spark))
+    def run(nBuckets: Int) =
+      KgPipeline.run(spark, corpus, dict, KgConfig(s"$dir/triples", s"$dir/manifest", "r1", nBuckets))
+    run(16)
+    val before = writtenScored(dir)
+    // pmod(h, 32) mod 16 == pmod(h, 16): every file the 32-bucket rerun
+    // routes to bucket b >= 16 was committed in bucket b - 16, so a
+    // resume would write its triples a second time
+    val e = intercept[IllegalArgumentException](run(32))
+    assert(e.getMessage.contains("at 16 buckets") && e.getMessage.contains("routes to 32"), e.getMessage)
+    assert(writtenScored(dir) == before && manifestRows(dir).keySet == (0 until 16).toSet)
+    // the count the run committed at still resumes, as a no-op
+    val again = run(16)
     assert(again.triplesWritten == 0L && again.bucketsCommitted == 16)
   }
 

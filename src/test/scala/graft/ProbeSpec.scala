@@ -30,6 +30,14 @@ class ProbeSpec extends SparkTestBase {
     assert(a == b, s"first differing line: $firstDiff")
   }
 
+  test("explain text names a call site without its line number") {
+    // an RDD's call site renders as `at <File>.scala:<line>`: the line
+    // moves with every edit above it, so the masked text drops it
+    val text = Probe.planText(spark.range(10).toDF().localCheckpoint())
+    assert(text.contains("localCheckpoint at ProbeSpec.scala"), text)
+    assert("\\.scala:\\d".r.findFirstIn(text).isEmpty, text)
+  }
+
   test("listener totals are complete when measured returns, with no sleep") {
     // a slow listener ahead on the same bus queue holds every event back,
     // so the totals are complete only if measured really drains the bus
